@@ -435,7 +435,7 @@ def q_minhash_lsh_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # signature is interpreted (HOFs never enter codegen), so the gate
     # corpus stays small and the input is SPREAD — a 1-2 file source
     # would compute all signatures on 1-2 cores (the streaming analogue
-    # of ops.dedup._ensure_parallel). Full-corpus batch equality is
+    # of spark.partitions.spread_narrow). Full-corpus batch equality is
     # pinned by tests/test_streaming.py.
     par = spark.sparkContext.defaultParallelism
     (_docs_doubled(spark, sf_dir)

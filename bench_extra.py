@@ -26,7 +26,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from defuddle_spark.spark.session import get_spark, host_resources
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", host_resources()[0]))
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
     explain_dir = os.environ.get("SPARK_GRAFT_EXPLAIN_DIR")
     suffix = os.environ.get("SPARK_GRAFT_EXPLAIN_SUFFIX", "")
@@ -39,7 +40,6 @@ def main() -> None:
 
     import __spark_entry__ as entry
     from defuddle_spark.ops.dedup import release_cached
-    from defuddle_spark.spark.session import get_spark
 
     spark = get_spark(cores=cpus, app_name="defuddle-bench-extra")
     spark.sparkContext.setLogLevel("ERROR")

@@ -21,9 +21,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from defuddle_spark.spark.partitions import spread_narrow
+
 # the shared ASCII-whitespace tokenizer class (never \s — see the
-# textstats.ASCII_WS_RE parity note) and the narrow-input guard
-from .dedup import _ensure_parallel
+# textstats.ASCII_WS_RE parity note)
 from .textstats import ASCII_WS_RE
 
 
@@ -71,7 +72,7 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 13,
     if broadcast_bench:
         bench = F.broadcast(bench)
     hit = bench.withColumn("_hit", F.lit(1))
-    exploded = _ensure_parallel(docs).select(
+    exploded = spread_narrow(docs).select(
         F.col(id_col),
         F.explode_outer(_gram_hashes(text_col, n)).alias("gram_hash"))
     stats = (exploded
@@ -108,7 +109,7 @@ def contamination_pairs(docs: DataFrame, benchmark: DataFrame, n: int = 13,
              .distinct())
     if broadcast_bench:
         bench = F.broadcast(bench)
-    exploded = _ensure_parallel(docs).select(
+    exploded = spread_narrow(docs).select(
         F.col(id_col),
         F.explode(_gram_hashes(text_col, n)).alias("gram_hash"))
     return (exploded

@@ -21,6 +21,10 @@ from typing import List, Optional
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from defuddle_spark.spark.partitions import spread_narrow
+
+from .textstats import ASCII_WS_CHARS, ASCII_WS_RE, _tokens
+
 log = logging.getLogger("defuddle_spark.ops.dedup")
 
 class DedupCache:
@@ -84,21 +88,21 @@ def dedup_exact(docs: DataFrame, id_col: str = "doc_id",
             .select(id_col, "dup_count"))
 
 
-def _ensure_parallel(docs: DataFrame) -> DataFrame:
-    """Repartition narrow inputs before row-amplifying work.
+def _same_key_pairs(keyed: DataFrame, keys: List[str],
+                    id_col: str) -> DataFrame:
+    """(id_a, id_b) for every two rows of ``keyed`` that agree on ``keys``,
+    each pair once with id_a < id_b (strict, so a duplicated id never
+    pairs with itself).
 
-    A single parquet file scans as ONE partition, which serializes the
-    explode-heavy operators onto one core (measured: 64-perm MinHash over
-    5k docs took 5.4 s single-partition vs sub-second parallel). At
-    cluster scale the input already has thousands of files and this is a
-    no-op; the probe is plan-only (leaf file count — see
-    spark.partitions.is_narrow), never a plan->RDD conversion.
-    """
-    from defuddle_spark.spark.partitions import is_narrow
-    target = docs.sparkSession.sparkContext.defaultParallelism
-    if is_narrow(docs, target):
-        return docs.repartition(target)
-    return docs
+    The one candidate-pair expander: an equi self-join, so a key's pairs
+    stream out of the join instead of being materialized inside one
+    row. Callers whose keyed frame carries several rows per doc (one per
+    band or block) dedup the result themselves."""
+    a, b = keyed.alias("a"), keyed.alias("b")
+    return (a.join(b, keys)
+            .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+            .select(F.col(f"a.{id_col}").alias("id_a"),
+                    F.col(f"b.{id_col}").alias("id_b")))
 
 
 def _let(value: F.Column, fn) -> F.Column:
@@ -127,7 +131,7 @@ def _token_shingles(text_col: str, k: int):
             F.sequence(F.lit(0), n - k),
             lambda i: F.concat_ws(" ", F.slice(tokens, i + 1, k)),
         )).otherwise(F.array(F.concat_ws(" ", tokens)))
-    return _let(F.split(F.trim(F.col(text_col)), r"\s+"), build)
+    return _let(_tokens(text_col), build)
 
 
 def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
@@ -140,18 +144,13 @@ def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
     permutation i is min over shingles of h1 + i*h2 (never overflows
     int64 under ANSI).
 
-    Round 8: computed ROW-LOCALLY (minhash_signature_col — the very
-    expression the streaming path uses, so batch and streaming
-    signatures are one definition) instead of the old explode + 64-way
-    min-aggregate. The explode shape paid a full exchange of one row
-    per (doc, shingle); its rationale ("codegen aggregates beat
-    interpreted HOFs") predated fixing the lambda re-evaluation
-    pathology (_let) — re-measured after the fix, row-local is 2x
-    faster at sf0.1 and ties at sf1.0 while shuffling NOTHING, which is
-    the shape that holds at 100 TB.
+    Computed ROW-LOCALLY by minhash_signature_col, the expression the
+    streaming path uses too, so batch and streaming signatures are one
+    definition. It shuffles NOTHING, the shape that holds at 100 TB; an
+    explode + 64-way min-aggregate measured 2x slower at sf0.1 and tied
+    at sf1.0 once lambdas were _let-bound.
     """
-    docs = _ensure_parallel(docs)
-    return docs.select(
+    return spread_narrow(docs).select(
         F.col(id_col),
         minhash_signature_col(text_col, num_perm, shingle_k).alias("sig"))
 
@@ -245,12 +244,7 @@ def minhash_lsh_candidates(docs: DataFrame, id_col: str = "doc_id",
     )
     banded = _drop_hot_buckets(banded, ["band", "band_hash"], hot_bucket_cap,
                                "minhash_lsh_candidates", log_dropped)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    pairs = (a.join(b, ["band", "band_hash"])
-             .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-             .select(F.col(f"a.{id_col}").alias("id_a"),
-                     F.col(f"b.{id_col}").alias("id_b"))
+    pairs = (_same_key_pairs(banded, ["band", "band_hash"], id_col)
              .dropDuplicates(["id_a", "id_b"]))
     pairs = (pairs
              .join(sigs.select(F.col(id_col).alias("id_a"),
@@ -299,7 +293,7 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
         # join whose hot-shingle buckets grow quadratically (measured
         # 109 s at sf1.0 for the join vs seconds for this). Same
         # 128-bit hash identity the join path uses.
-        base = _ensure_parallel(docs).select(
+        base = spread_narrow(docs).select(
             F.col(id_col),
             F.array_sort(F.array_distinct(F.transform(
                 _token_shingles(text_col, k),
@@ -309,53 +303,42 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
         # cheap upper bound on distinct shingles/doc: the token count
         # (shingle count is n_tokens - k + 1 <= n_tokens); avoids
         # running the full hash+sort projection twice for the guard
-        mx = docs.agg(F.max(F.size(
-            F.split(F.trim(F.col(text_col)), r"\s+")))).first()[0]
+        mx = docs.agg(F.max(F.size(_tokens(text_col)))).first()[0]
         if mx is not None and mx < 1_000_000:
             sig = base.select(
                 F.col(id_col),
                 F.xxhash64("_hs").alias("_k1"),
                 F.xxhash64("_hs", F.lit(1)).alias("_k2"))
-            grp = (sig.groupBy("_k1", "_k2")
-                   .agg(F.array_sort(F.collect_list(id_col)).alias("_ids"))
-                   .filter(F.size("_ids") > 1))
-            ids = F.col("_ids")
-            pairs = F.flatten(F.transform(
-                F.sequence(F.lit(1), F.size(ids) - 1),
-                lambda i: F.transform(
-                    F.slice(ids, 1, i),
-                    lambda a: F.struct(a.alias("id_a"),
-                                       F.element_at(ids, i + 1)
-                                       .alias("id_b")))))
-            return (grp.select(F.explode(pairs).alias("_p"))
-                    .select(F.col("_p.id_a").alias("id_a"),
-                            F.col("_p.id_b").alias("id_b"),
-                            F.lit(1.0).alias("jaccard"))
-                    # strict, like the join's a.id < b.id: an id-colliding
-                    # corpus (duplicate doc_ids) must not emit self-pairs
-                    .filter(F.col("id_a") < F.col("id_b")))
+            # a group's pairs stream out of the self-join (a 20k-member
+            # group would need one 2*10^8-element array if built in a
+            # row). Merge hint: both join sides then read ONE exchange
+            # of sig, so the hash+sort projection runs once; a
+            # broadcast join evaluates it once per side (measured on
+            # dedup_clusters at sf0.1, 4 cores: 5.0 s vs 3.2 s, min of 3).
+            return (_same_key_pairs(sig.hint("merge"), ["_k1", "_k2"],
+                                    id_col)
+                    .withColumn("jaccard", F.lit(1.0)))
         # a >=10^6-distinct-shingle doc exists: the 1/|union| bound no
         # longer separates equal from near-equal sets — general path
-    # the distinct-shingle array is materialized once per row: the
-    # per-doc size is row-local (no extra aggregation), and the shingle
-    # STRING never crosses an exchange — the self-join keys on a pair of
-    # independent 64-bit hashes taken in the same stage as the explode
-    # (collision of both within one shingle-key space is ~2^-128, the
-    # same guarantee dedup_substrings relies on; the join only counts
-    # matches, so the jaccard values are unchanged)
-    base = _ensure_parallel(docs).select(
+    # the distinct-shingle array is materialized once per row, and the
+    # shingle STRING never crosses an exchange — the self-join keys on a
+    # pair of independent 64-bit hashes taken in the same stage as the
+    # explode (collision of both within one shingle-key space is
+    # ~2^-128, the same guarantee dedup_substrings relies on; the join
+    # only counts matches, so the jaccard values are unchanged). Sizes
+    # are ONE row per id — the sum of its rows' distinct-shingle counts,
+    # as the join's n_common sums over them — so a duplicated id cannot
+    # fan the sizes joins out into several jaccard rows per pair.
+    base = spread_narrow(docs).select(
         F.col(id_col),
         F.array_distinct(_token_shingles(text_col, k)).alias("_sh"))
-    sizes = base.select(F.col(id_col), F.size("_sh").alias("n"))
+    sizes = base.groupBy(id_col).agg(F.sum(F.size("_sh")).alias("n"))
     sh = (base.select(F.col(id_col), F.explode("_sh").alias("_s"))
           .select(F.col(id_col),
                   F.xxhash64("_s").alias("_h1"),
                   F.xxhash64("_s", F.lit(1)).alias("_h2")))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (a.join(b, ["_h1", "_h2"])
-             .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-             .groupBy(F.col(f"a.{id_col}").alias("id_a"),
-                      F.col(f"b.{id_col}").alias("id_b"))
+    inter = (_same_key_pairs(sh, ["_h1", "_h2"], id_col)
+             .groupBy("id_a", "id_b")
              .agg(F.count("*").alias("n_common")))
     jac = (inter
            .join(sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("n", "n_a"), "id_a")
@@ -383,9 +366,8 @@ def simhash64(docs: DataFrame, id_col: str = "doc_id",
     Built entirely from native expressions: explode tokens, per-bit
     accumulation via aggregate over 64 shiftright/bitwise ops.
     """
-    tokens = _ensure_parallel(docs).select(
-        F.col(id_col),
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("tok"))
+    tokens = spread_narrow(docs).select(
+        F.col(id_col), F.explode(_tokens(text_col)).alias("tok"))
     h = F.xxhash64("tok")
     bit_cols = [
         F.sum(F.when(F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, 1)
@@ -494,11 +476,7 @@ def simhash_near_pairs(docs: DataFrame, id_col: str = "doc_id",
     )
     chunks = _drop_hot_buckets(chunks, ["chunk_idx", "chunk"], hot_bucket_cap,
                                "simhash_near_pairs", log_dropped)
-    a, b = chunks.alias("a"), chunks.alias("b")
-    pairs = (a.join(b, ["chunk_idx", "chunk"])
-             .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-             .select(F.col(f"a.{id_col}").alias("id_a"),
-                     F.col(f"b.{id_col}").alias("id_b"))
+    pairs = (_same_key_pairs(chunks, ["chunk_idx", "chunk"], id_col)
              .dropDuplicates(["id_a", "id_b"]))
     pairs = (pairs
              .join(sims.select(F.col(id_col).alias("id_a"),
@@ -571,7 +549,7 @@ def duplicate_components(pairs: DataFrame, id_a: str = "id_a",
     driver loop ran — under auto, both phases summed), ``converged``
     and ``algorithm`` (``auto:label`` / ``auto:star`` records which
     phase produced the result) — the round-count evidence behind the
-    algorithm choice, and what tools/components_bench.py records.
+    algorithm choice (frozen in BENCH/components_star_r7.json).
     """
     if algorithm == "star":
         return _components_star(pairs, id_a, id_b, max_iters, strict,
@@ -886,16 +864,11 @@ def dedup_paragraphs(docs: DataFrame, id_col: str = "doc_id",
 
 def minhash_signature_col(text_col: str = "text", num_perm: int = 64,
                           shingle_k: int = 3) -> F.Column:
-    """ROW-LOCAL minhash signature expression — bit-identical to
-    minhash_signatures' explode+groupBy-min values (same xxhash64/pmod
-    universal-hash construction, exact integer arithmetic), but computed
-    per row with array higher-order functions instead of a shuffle.
-
-    The batch path stays the explode+aggregate (codegen + map-side
-    combine beats interpreted HOFs at batch volume — see
-    minhash_signatures); this expression exists for STREAMING, where
-    per-row locality is the right shape (no shuffle before the stateful
-    banding stage).
+    """ROW-LOCAL minhash signature expression (xxhash64/pmod
+    universal-hash construction, exact integer arithmetic), computed per
+    row with array higher-order functions — no shuffle. The one
+    signature definition: batch (minhash_signatures) and streaming
+    (minhash_lsh_stream) both project it.
 
     The shingle array and both hash arrays are _let-bound (see _let):
     without the binding, every one of the ``num_perm`` array_min terms
@@ -973,9 +946,8 @@ def dedup_substrings(docs: DataFrame, n: int = 50,
     aggregate and the join) — at TB scale persist/checkpoint upstream
     so the explode runs once, same convention as dedup_paragraphs.
     """
-    from .textstats import ASCII_WS_RE
     did = F.col(id_col)
-    docs = _ensure_parallel(docs)
+    docs = spread_narrow(docs)
     toks_arr = F.filter(
         F.split(F.coalesce(F.col(text_col), F.lit("")), ASCII_WS_RE),
         lambda t: t != "")
@@ -1086,7 +1058,6 @@ def normalize_for_dedup_col(text_col: str = "text") -> F.Column:
     script (\\p{Nd}) unify to 0; other scripts pass through unchanged.
     Full ICU normalization would need a Pandas UDF off the hot path.
     """
-    from .textstats import ASCII_WS_CHARS
     hws = ASCII_WS_CHARS.replace("\n", "")  # horizontal whitespace only
     t = F.lower(F.coalesce(F.col(text_col), F.lit("")))
     # ß/æ/œ expand to two letters — translate() is 1:1, so replace first

@@ -17,13 +17,16 @@ from typing import List, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from defuddle_spark.spark.partitions import spread_narrow
+
+from .dedup import _let, _same_key_pairs
+
 
 def _as_double_array(vec: Sequence[float]) -> F.Column:
     return F.array(*[F.lit(float(x)).cast("double") for x in vec])
 
 
 def cosine_similarity_col(emb_col: str, query: Sequence[float]) -> F.Column:
-    from defuddle_spark.ops.dedup import _let
     q = _as_double_array(query)
     norm_q = float(math.sqrt(sum(float(x) * float(x) for x in query))) or 1.0
 
@@ -140,18 +143,13 @@ def cosine_neardup_pairs(embeddings: DataFrame, threshold: float = 0.9,
             yield pd.DataFrame({"id_a": id_a[keep], "id_b": id_b[keep]})
 
     from pyspark.sql.types import StructField, StructType
-    from defuddle_spark.spark.partitions import is_narrow
 
-    parts = src
-    target = spark.sparkContext.defaultParallelism
-    if is_narrow(parts, target):
-        parts = parts.repartition(target)
     # pair schema follows the caller's id column type (string doc keys are
     # common); hardcoding long broke non-long ids at Arrow conversion
     id_type = embeddings.schema[id_col].dataType
     pair_schema = StructType([StructField("id_a", id_type),
                               StructField("id_b", id_type)])
-    cand = parts.mapInPandas(gen, pair_schema)
+    cand = spread_narrow(src).mapInPandas(gen, pair_schema)
     return _exact_pair_cosine(cand, embeddings, id_col, emb_col,
                               threshold, round_digits)
 
@@ -281,11 +279,7 @@ def cosine_neardup_lsh(embeddings: DataFrame, dim: int, threshold: float = 0.9,
             F.col("sig").bitwiseAND(F.lit(~m & ((1 << planes) - 1)))
             for m in masks
         ])).alias("probe", "key"))
-    a, b = probes.alias("a"), probes.alias("b")
-    cand = (a.join(b, ["probe", "key"])
-            .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-            .select(F.col(f"a.{id_col}").alias("id_a"),
-                    F.col(f"b.{id_col}").alias("id_b"))
+    cand = (_same_key_pairs(probes, ["probe", "key"], id_col)
             .dropDuplicates(["id_a", "id_b"]))
     return _exact_pair_cosine(cand, embeddings, id_col, emb_col,
                               threshold, round_digits)
@@ -322,7 +316,6 @@ def lsh_signature_col(emb_col: str, dim: int, planes: int = 16) -> F.Column:
     vector — ``planes`` redundant O(dim) passes per row (see
     ops.dedup._let).
     """
-    from defuddle_spark.ops.dedup import _let
     hyper = F.array(*[_as_double_array(_hyperplane(p, dim))
                       for p in range(planes)])
     masks = F.array(*[F.lit(1 << p).cast("long") for p in range(planes)])
@@ -443,7 +436,6 @@ def _nearest_list_col(emb_col: str, centroids: List[List[float]]) -> F.Column:
     embeddings (ADVICE r3). The cast transform is _let-bound so the
     per-centroid distances read one bound array instead of re-casting
     the vector n_lists times (see ops.dedup._let)."""
-    from defuddle_spark.ops.dedup import _let
     cent = F.array(*[F.array(*[F.lit(float(v)) for v in c])
                      for c in centroids])
 

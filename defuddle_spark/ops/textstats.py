@@ -7,6 +7,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from defuddle_spark.spark.partitions import spread_narrow
+
 # Small deterministic English stopword list (public, standard function words)
 EN_STOPWORDS = [
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "it", "that",
@@ -26,26 +28,20 @@ LANG_MARKERS = {
 # explicit charclass instead of \s: Java regex \s includes \x0B,
 # RE2 (the DuckDB oracles, Go) does not — spelling out ASCII whitespace
 # keeps Spark and oracle tokenization identical on every byte. THE
-# single source of truth: dedup/decontam import these so a future edit
-# cannot silently diverge their tokenization from the text stats.
+# single source of truth: dedup/decontam/page synthesis import these so
+# a future edit cannot silently diverge their tokenization from the
+# text stats. The class equals Java's \s, so on Spark it splits exactly
+# where \s+ would.
 ASCII_WS_CHARS = " \t\n\x0B\f\r"
 ASCII_WS_RE = "[" + ASCII_WS_CHARS + "]+"
 
 
-def _tokens(text_col: str) -> F.Column:
-    return F.split(F.trim(F.col(text_col)), ASCII_WS_RE)
-
-
-def _spread(docs: DataFrame) -> DataFrame:
-    """Spread narrow inputs before per-row array work: a single parquet
-    file scans as ONE partition, serializing row-local ops onto one
-    core (same rationale as ops.dedup._ensure_parallel; plan-only
-    probe, a no-op on inputs that already have many files)."""
-    from defuddle_spark.spark.partitions import is_narrow
-    target = docs.sparkSession.sparkContext.defaultParallelism
-    if is_narrow(docs, target):
-        return docs.repartition(target)
-    return docs
+def _tokens(text) -> F.Column:
+    """The Spark whitespace tokenizer: ``split(trim(text), ASCII_WS_RE)``
+    over a column or column name. ``trim`` strips spaces only, so a
+    text that starts or ends with another whitespace byte keeps an empty
+    edge token, and an empty text yields ``[""]``."""
+    return F.split(F.trim(text), ASCII_WS_RE)
 
 
 def token_count_col(text_col: str) -> F.Column:
@@ -78,7 +74,7 @@ def token_stats(docs: DataFrame, id_col: str = "doc_id",
     once per row — chars_per_bpe_token references it twice, and inlined
     that ran the full-text regex scan twice (round 8) — and narrow
     inputs are spread across cores."""
-    pre = _spread(docs).select(
+    pre = spread_narrow(docs).select(
         F.col(id_col), F.col(text_col),
         F.regexp_count(F.col(text_col), F.lit(BPE_TOKEN_RE)).alias("_bpe"))
     n_bpe = F.col("_bpe")
@@ -99,7 +95,7 @@ def text_quality(docs: DataFrame, id_col: str = "doc_id",
     The token array is materialized once per row (round 8): the size /
     length-fold / stopword-filter consumers each re-ran the regex split
     when it was inlined, and narrow inputs are spread across cores."""
-    docs = _spread(docs).select(
+    docs = spread_narrow(docs).select(
         F.col(id_col), F.col(text_col), _tokens(text_col).alias("_tk"))
     tokens = F.col("_tk")
     n_tokens = F.size(tokens)
@@ -146,8 +142,8 @@ def fingerprint(docs: DataFrame, id_col: str = "doc_id",
         lambda acc, t: F.pmod(acc * F.lit(31).cast("long")
                               + F.length(t).cast("long"),
                               F.lit(1000000007).cast("long")))
-    return _spread(docs).select(F.col(id_col), fp_md5.alias("fp_md5"),
-                                fp_poly.alias("fp_poly"))
+    return spread_narrow(docs).select(F.col(id_col), fp_md5.alias("fp_md5"),
+                                      fp_poly.alias("fp_poly"))
 
 
 def lang_id(docs: DataFrame, id_col: str = "doc_id",
@@ -159,7 +155,7 @@ def lang_id(docs: DataFrame, id_col: str = "doc_id",
     materialized columns — the when-chain references each score twice,
     and inlined that re-ran the split + lower + filter pass per
     reference; narrow inputs are spread across cores."""
-    pre = _spread(docs).select(
+    pre = spread_narrow(docs).select(
         F.col(id_col), F.col(text_col),
         F.transform(_tokens(text_col), F.lower).alias("_lt"))
 
@@ -228,16 +224,10 @@ def repetition_signals(docs: DataFrame, id_col: str = "doc_id",
     O(grams) times per document (the old explode paid exactly this on
     its concat_ws(slice(tokens)) too); and narrow inputs are spread
     first (a single parquet file scans as ONE partition, serializing
-    the whole corpus onto one core — same rationale as
-    ops.dedup._ensure_parallel).
+    the whole corpus onto one core — see spark.partitions).
     """
     did = F.col(id_col)
-    # spread narrow inputs before the per-row heavy lifting (plan-only
-    # probe; a no-op when the input already has many files/partitions)
-    from defuddle_spark.spark.partitions import is_narrow
-    target = docs.sparkSession.sparkContext.defaultParallelism
-    if is_narrow(docs, target):
-        docs = docs.repartition(target)
+    docs = spread_narrow(docs)
     # NULL text means every signal is 0, not NULL — and the DuckDB
     # oracle coalesces the same way, so the two engines can't diverge
     # on a nullable text column
@@ -259,9 +249,8 @@ def repetition_signals(docs: DataFrame, id_col: str = "doc_id",
 
     # first projection: every text-derived array is materialized ONCE
     # per row; all downstream lambdas slice these columns (see the
-    # evaluation rules in the docstring). Tokenization deliberately
-    # stays Java \s+ — the exact split this op has always used.
-    tokens0 = F.split(F.trim(text), r"\s+")
+    # evaluation rules in the docstring)
+    tokens0 = _tokens(text)
     pre = docs.select(
         did, F.length(text).alias("_chars"),
         F.filter(F.split(text, "\n"),

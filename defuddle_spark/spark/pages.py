@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from defuddle_spark.ops.textstats import _tokens
+
 PAGES_COLUMNS = ["url", "warc_ts", "html", "text", "lang"]
 
 
@@ -149,8 +151,7 @@ def pages_only(df: DataFrame) -> DataFrame:
 
 def _docs_with_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return docs.withColumn(
-        "n_tokens", F.size(F.split(F.trim(F.col("text")), r"\s+")))
+    return docs.withColumn("n_tokens", F.size(_tokens("text")))
 
 
 def synthesize_scored_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -263,61 +264,6 @@ def synthesize_giant_pages(spark: SparkSession, sf_dir: str,
         url.alias("url"), warc_ts.alias("warc_ts"),
         F.encode(html_str, "UTF-8").alias("html"),
         F.col("text"), F.col("lang"), F.col("doc_id"))
-
-
-def synthesize_pareto_pages(spark: SparkSession, sf_dir: str,
-                            n_pages: int = 2000,
-                            base_repeats: int = 670,
-                            tail_alpha: float = 1.5,
-                            max_mult: int = 100) -> DataFrame:
-    """Continuous heavy-tailed (Pareto) page-size archetype.
-
-    Unlike :func:`synthesize_giant_pages` (bimodal: normal pages plus
-    fixed-size giants), every page here draws a size multiplier from a
-    discrete Pareto law with survival P(mult > x) = x**-tail_alpha,
-    capped at ``max_mult`` — the Common-Crawl reality the north rule's
-    "skew handled explicitly" clause targets: most pages are a few
-    hundred KB, the top ~0.1% are ~100x the median. The draw is
-    deterministic in the url (xxhash64 -> uniform -> inverse-CDF), so
-    the corpus is bit-stable across runs and cluster layouts.
-
-    Used by tools/heavy_tail_bench.py to measure straggler containment
-    of the two-tier ``giant_threshold_bytes`` split; not part of the
-    oracle gate set (bench-only archetype).
-    """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    n_docs = docs.count()
-    copies = max(1, -(-n_pages // n_docs))
-    docs = docs.select(
-        "doc_id", "lang", "source", "text",
-        F.explode(F.sequence(F.lit(0), F.lit(copies - 1))).alias("copy"),
-    ).filter(F.col("doc_id") + F.col("copy") * n_docs < n_pages)
-    url = F.concat(F.lit("https://tail.example.test/"), F.col("lang"),
-                   F.lit("/"), F.col("source"), F.lit("/"),
-                   F.col("copy").cast("string"), F.lit("-"),
-                   F.col("doc_id").cast("string"))
-    # uniform in (0, 1] from the url hash, then inverse-CDF of the
-    # Pareto: mult = floor(u ** (-1/alpha)), capped.
-    u = (F.pmod(F.xxhash64(url), F.lit(1_000_000)) + 1) / 1_000_001.0
-    mult = F.least(
-        F.lit(max_mult),
-        F.greatest(F.lit(1), F.floor(F.pow(u, F.lit(-1.0 / tail_alpha)))),
-    ).cast("int")
-    title = F.concat(F.lit("Doc "), F.col("doc_id").cast("string"))
-    body_text = F.concat_ws(
-        " ", F.array_repeat(F.col("text"), mult * base_repeats))
-    html_str = F.concat(
-        F.lit('<!DOCTYPE html><html><head><meta charset="utf-8"><title>'),
-        title, F.lit("</title></head><body>"),
-        F.lit('<header><div class="logo">Example Docs</div></header>'),
-        F.lit("<article><h1>"), title, F.lit("</h1><p>"), body_text,
-        F.lit("</p></article>"),
-        F.lit("<footer>© 2024 Example Docs</footer></body></html>"),
-    )
-    return docs.select(
-        url.alias("url"),
-        F.encode(html_str, "UTF-8").alias("html"),
-        mult.alias("size_mult"), F.col("doc_id"))
 
 
 # Byline text used by the retry archetype; the oracle concatenates it

@@ -63,7 +63,7 @@ _RESULT_FIELDS = [f.name for f in RESULT_SCHEMA.fields]
 def _extract_batches(batches: Iterator[pd.DataFrame],
                      remove_images: bool = False,
                      kernel_options: Optional[dict] = None) -> Iterator[pd.DataFrame]:
-    """Arrow-batch kernel driver: one Python call per batch, C-parser per doc.
+    """Arrow-batch kernel driver: one Python call per batch, one kernel call per doc.
 
     Imported lazily on executors; selector tables compile once per worker
     process (module-level caches in defuddle_spark.selectors).
@@ -128,22 +128,14 @@ def extract_pages(pages: DataFrame,
     df = pages.select("url", "html").filter(
         F.col("html").isNotNull() & (F.length(F.col("html")) > 0))
 
-    # Narrow inputs serialize the kernel: a single parquet file (or a
-    # freshly synthesized frame) scans as ONE partition, so the Arrow
-    # kernel would run on one core regardless of cluster width. When the
-    # caller didn't pick an explicit salt_partitions, widen narrow inputs
-    # to the session's parallelism, salted by url-hash (same skew defense
-    # as the explicit path). At cluster scale real inputs already carry
-    # thousands of files and this is a no-op. The narrowness probe is
-    # plan-only (leaf file count, spark.partitions.is_narrow) — an RDD
-    # conversion would force AQE to materialize upstream shuffle stages at
-    # plan-build time; inputs that already carry a tuned shuffle
-    # partitioning should pass salt_partitions explicitly.
+    # Without an explicit salt_partitions, spread narrow inputs (which
+    # would run the kernel on one core; see spark.partitions) salted by
+    # url-hash, the same skew defense as the explicit path. Inputs that
+    # already carry a tuned shuffle partitioning should pass
+    # salt_partitions explicitly.
     if not salt_partitions and not df.isStreaming:
-        from defuddle_spark.spark.partitions import is_narrow
-        target = pages.sparkSession.sparkContext.defaultParallelism
-        if is_narrow(df, target):
-            df = df.repartition(target, F.xxhash64(F.col("url")))
+        from defuddle_spark.spark.partitions import spread_narrow
+        df = spread_narrow(df, F.xxhash64(F.col("url")))
 
     def _run(part: DataFrame) -> DataFrame:
         return part.mapInPandas(

@@ -12,6 +12,9 @@ Scale rationale (100 TB / 1000-executor design; tested on local[N]):
   row cap.
 - shuffle partitions default to 2x cores locally; on a real cluster this
   is overridden to ~2-3x total executor cores.
+- cores and the driver heap default from the host (host_resources,
+  default_driver_heap); ``SPARK_GRAFT_CPUS`` / ``SPARK_DRIVER_MEMORY``
+  override them.
 """
 
 from __future__ import annotations
@@ -36,6 +39,32 @@ ROCKSDB_STATE_CONF = {
 }
 
 
+def default_driver_heap(mem_total_mib: int | None) -> str:
+    """min(16g, 60% of MemTotal); 16g when the host memory is unknown.
+
+    In local mode the driver JVM hosts EVERY executor thread, so its
+    heap is the whole cluster's unified memory pool: 8g for 32
+    concurrent tasks plus a cached corpus measurably GC-throttled the
+    shuffle/state-heavy queries (full-bench A/B at sf0.1 on a 32-core
+    host: 106.7 s at 8g -> 91.9 s at 16g). The 60% leaves the Python
+    workers and the OS room on smaller hosts. On a real cluster this
+    conf sizes only the driver."""
+    cap = 16 * 1024
+    return f"{cap if mem_total_mib is None else min(cap, mem_total_mib * 6 // 10)}m"
+
+
+def host_resources() -> tuple[int, int | None]:
+    """(CPUs this process may run on, MemTotal in MiB or None)."""
+    n_cpus = (len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity")
+              else os.cpu_count() or 1)
+    try:
+        with open("/proc/meminfo") as f:
+            return n_cpus, next(int(line.split()[1]) // 1024 for line in f
+                                if line.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return n_cpus, None
+
+
 def get_spark(cores: int | None = None,
               shuffle_partitions: int | None = None,
               app_name: str = "defuddle-spark",
@@ -48,8 +77,9 @@ def get_spark(cores: int | None = None,
     docstring points at) — kept as a named flag so the conf shape can't
     drift from the documentation; exercised for real in
     tests/test_streaming.py (Spark 4 bundles rocksdbjni)."""
+    host_cpus, host_mem_mib = host_resources()
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS", host_cpus))
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cores, 8)
     builder = (
@@ -63,22 +93,16 @@ def get_spark(cores: int | None = None,
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
         .config("spark.sql.execution.arrow.maxBytesPerBatch", str(arrow_batch_bytes))
         .config("spark.sql.files.maxPartitionBytes", "64m")
-        # In local mode the driver JVM hosts EVERY executor thread, so
-        # its heap is the whole cluster's unified memory pool: 8g for 32
-        # concurrent tasks plus a cached corpus measurably GC-throttled
-        # the shuffle/state-heavy queries (full-bench A/B at sf0.1:
-        # 106.7 s at 8g -> 91.9 s at 16g, the delta concentrated in
-        # exactly those queries). 16g on the 128 GiB sandbox; still
-        # env-overridable, and on a real cluster this conf sizes only
-        # the driver — executors are sized by the submitter.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY",
+                               default_driver_heap(host_mem_mib)))
         .config("spark.ui.enabled", "false")
     )
     if rocksdb_state_store:
         for k, v in ROCKSDB_STATE_CONF.items():
             builder = builder.config(k, v)
     # last-wins overrides, e.g. spark.ui.enabled=true for tools that
-    # read per-task metrics off the REST API (tools/heavy_tail_bench.py)
+    # read per-task metrics off the REST API, or an event log directory
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

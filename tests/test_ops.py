@@ -221,6 +221,43 @@ def test_whitespace_tokenization_engine_parity(spark):
         params=[nasty]).fetchone()[0]
     assert spark_toks == duck_toks == list("abcdefgh") + ["i"]
 
+    # bytes no corpus contains: \x0B splits; NBSP, the C0 separators
+    # \x1c-\x1f, NEL and the ideographic space do not. Every Spark
+    # tokenizer entry point must split on exactly [ \t\n\x0B\f\r]
+    # (and trim only spaces).
+    import re
+
+    from defuddle_spark.ops.dedup import _token_shingles, simhash64
+    from defuddle_spark.ops.textstats import repetition_signals
+    rare = ("p\x0bq r\u00a0s\x1ct\x1du\x1ev\x1fw\u0085x\u3000y "
+            "p\x0bq\x0b\x0br\u00a0s\x1ct\x1du\x1ev\x1fw\u0085x\u3000y "
+            "\u00a0 p q")
+    want = re.split("[ \t\n\x0b\f\r]+", rare.strip(" "))
+    assert len(want) == 9 and "r\u00a0s\x1ct\x1du\x1ev\x1fw\u0085x\u3000y" in want
+    df = spark.createDataFrame([(1, rare), (2, " ".join(want))],
+                               "doc_id long, text string")
+    row = df.filter("doc_id = 1").select(
+        _tokens("text").alias("t"),
+        _token_shingles("text", 1).alias("s")).head()
+    assert row["t"] == row["s"] == want
+    assert duckdb.sql(
+        f"SELECT {entrymod._TOKENS} AS t FROM (SELECT ? AS text)",
+        params=[rare]).fetchone()[0] == want
+    # simhash64 explodes the same tokens as the space-joined reference
+    sims = {r["doc_id"]: r["simhash"] for r in simhash64(df).collect()}
+    assert sims[1] == sims[2]
+    # repetition_signals' n-gram coverage, from a Python reference over
+    # the same tokens: the most frequent n-gram (ties: most characters)
+    # times its joined length, over the text length
+    from collections import Counter
+    rep = repetition_signals(df.filter("doc_id = 1")).head()
+    for n in (2, 3, 4):
+        grams = Counter(tuple(want[i:i + n])
+                        for i in range(len(want) - n + 1))
+        cov = max((c, c * len(" ".join(g))) for g, c in grams.items())[1]
+        assert rep[f"top_{n}gram_char_frac"] == round(
+            min(1.0, cov / len(rare)), 6), n
+
 
 def test_unigram_cross_entropy_layout_independent(spark):
     """The decimal fixed-point accumulation makes the score bit-identical
@@ -959,9 +996,17 @@ def test_pii_signals(spark):
 def test_ngram_jaccard_threshold1_specialization_differential(spark):
     """The threshold-1.0 equal-sets fast path (round 8) must emit
     EXACTLY the shingle self-join's pairs — including NULL/empty/short
-    documents (whose fallback shingle is the joined token string) and
-    within-group completeness on triples."""
+    documents (whose fallback shingle is the joined token string),
+    within-group completeness on triples, and every C(200, 2) pair of a
+    planted 200-member cluster, each once. The groups expand through
+    the shared self-join, never inside one row (a 20k-member group
+    would need one 2*10^8-element array)."""
+    import contextlib
+    import io
+    from itertools import combinations
+
     from defuddle_spark.ops import dedup as dd
+    cluster = list(range(1000, 1400, 2))
     rows = [
         (1, "alpha beta gamma delta epsilon"),
         (2, "alpha beta gamma delta epsilon"),          # dup of 1
@@ -971,10 +1016,13 @@ def test_ngram_jaccard_threshold1_specialization_differential(spark):
         (8, "one two"), (9, "one two"),                  # short-doc fallback
         (10, "one two three"),                           # real 3-gram doc
         (11, "gamma delta epsilon alpha beta"),          # same tokens, diff order
-    ]
+    ] + [(i, "one boilerplate text shared by a whole cluster")
+         for i in cluster] + [(i + 1, f"singleton {i} with its own words")
+                              for i in cluster]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    fast = {(r["id_a"], r["id_b"], r["jaccard"])
-            for r in dd.ngram_jaccard_pairs(df, threshold=1.0).collect()}
+    fast_rows = dd.ngram_jaccard_pairs(df, threshold=1.0).collect()
+    fast = {(r["id_a"], r["id_b"], r["jaccard"]) for r in fast_rows}
+    assert len(fast_rows) == len(fast)
     # force the general join path (threshold below the gate), then keep
     # exactly the rounds-to-1.0 pairs the fast path must reproduce
     slow = {(r["id_a"], r["id_b"], r["jaccard"])
@@ -986,6 +1034,30 @@ def test_ngram_jaccard_threshold1_specialization_differential(spark):
             (8, 9)} <= ids
     assert all(j == 1.0 for _, _, j in fast)
     assert (1, 4) not in ids and (10, 8) not in ids and (10, 11) not in ids
+    assert {p for p in ids if p[0] >= 1000} == set(combinations(cluster, 2))
+    assert len(fast) == 19_900 + 7
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        dd.ngram_jaccard_pairs(df, threshold=1.0).explain("formatted")
+    assert "Join" in buf.getvalue()
+    assert "collect_list" not in buf.getvalue()
+
+
+def test_ngram_jaccard_duplicate_id_one_row_per_pair(spark):
+    """A doc_id carried by two rows is one document whose size is the
+    sum of its rows' distinct-shingle counts, so every (id_a, id_b)
+    comes back once — per-row sizes fanned the sizes joins out into one
+    jaccard row per duplicate."""
+    from defuddle_spark.ops.dedup import ngram_jaccard_pairs
+    rows = [(1, "a b c d e"),      # 3 shingles
+            (1, "x y z"),          # 1 shingle, same id
+            (2, "a b c d e"),
+            (3, "q r s t u")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    out = [tuple(r) for r in ngram_jaccard_pairs(df, threshold=0.5)
+           .collect()]
+    # n_common = 3, n_1 = 3 + 1, n_2 = 3 -> 3 / (4 + 3 - 3)
+    assert out == [(1, 2, 0.75)]
 
 
 def test_pii_ipv4_sentence_final(spark):

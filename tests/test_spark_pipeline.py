@@ -184,34 +184,6 @@ def test_giant_two_tier_byte_identity(spark):
         assert tuple(r) == tuple(two[url]), url
 
 
-def test_pareto_pages_shape_and_determinism(spark):
-    """synthesize_pareto_pages draws sizes from a capped Pareto law
-    deterministically in the url: same corpus bit-for-bit across calls,
-    multiplier within [1, max_mult], and a genuine heavy tail (the cap
-    is reached, i.e. some page is max_mult x the base size) while the
-    bulk stays small (median multiplier == 1 for alpha=1.5)."""
-    from defuddle_spark.spark.pages import synthesize_pareto_pages
-    kw = dict(n_pages=400, base_repeats=3)
-    a = synthesize_pareto_pages(spark, "/root/testdata/sf0.001", **kw)
-    stats = a.agg(
-        F.count("*").alias("n"),
-        F.min("size_mult").alias("lo"), F.max("size_mult").alias("hi"),
-        F.expr("percentile(size_mult, 0.5)").alias("med"),
-        F.countDistinct("url").alias("urls")).collect()[0]
-    assert stats["n"] == 400 and stats["urls"] == 400
-    assert stats["lo"] == 1 and stats["med"] == 1.0
-    # deterministic draw at 400 pages tops out at 88x the base size —
-    # a genuine ~100x-class tail (the 2000-page bench corpus hits the
-    # 100x cap itself)
-    assert stats["hi"] == 88
-    b = synthesize_pareto_pages(spark, "/root/testdata/sf0.001", **kw)
-    a_rows = {r["url"]: (bytes(r["html"]), r["size_mult"])
-              for r in a.collect()}
-    b_rows = {r["url"]: (bytes(r["html"]), r["size_mult"])
-              for r in b.collect()}
-    assert a_rows == b_rows
-
-
 def test_result_sink_dispatch(spark, tmp_path):
     """write_results: parquet path round-trips (with partitioning);
     the iceberg path refuses eagerly with the catalog checklist when no
@@ -298,3 +270,50 @@ def test_iceberg_writer_contract(spark, tmp_path, monkeypatch):
     import pytest
     with pytest.raises(RuntimeError, match="Iceberg catalog"):
         write_results(df, "db.results", format="iceberg")
+
+
+def test_session_defaults_sized_from_host(monkeypatch):
+    """With no env overrides, get_spark takes its cores from the CPUs
+    this process may run on and a driver heap of min(16g, 60% of
+    MemTotal). Pinned on the builder calls, not a live session
+    (getOrCreate would reuse the suite's session)."""
+    from pyspark.sql import SparkSession
+
+    from defuddle_spark.spark import session
+
+    assert session.default_driver_heap(15 * 1024) == "9216m"
+    assert session.default_driver_heap(16070) == "9642m"
+    assert session.default_driver_heap(128 * 1024) == "16384m"
+    assert session.default_driver_heap(None) == "16384m"
+
+    captured = {}
+
+    class _Recorder:
+        def master(self, m):
+            captured["master"] = m
+            return self
+
+        def appName(self, *_):
+            return self
+
+        def config(self, k, v):
+            captured[k] = v
+            return self
+
+        def getOrCreate(self):
+            return "session-sentinel"
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    monkeypatch.setattr(session, "host_resources", lambda: (3, 15 * 1024))
+    monkeypatch.setattr(SparkSession, "builder", _Recorder())
+    assert session.get_spark() == "session-sentinel"
+    assert captured["master"] == "local[3]"
+    assert captured["spark.driver.memory"] == "9216m"
+    assert captured["spark.sql.shuffle.partitions"] == "8"
+    # the env overrides still win
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "2g")
+    session.get_spark()
+    assert captured["master"] == "local[5]"
+    assert captured["spark.driver.memory"] == "2g"
