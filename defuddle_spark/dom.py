@@ -567,14 +567,6 @@ class Element(Node):
             return []
         return [s for s in sibs[i + 1:] if s.type == ELEMENT]
 
-    def ancestor_count(self) -> int:
-        n = 0
-        p = self.parent
-        while p is not None:
-            n += 1
-            p = p.parent
-        return n
-
     def closest(self, tag: str) -> Optional["Element"]:
         el: Optional[Element] = self
         while el is not None:
@@ -637,35 +629,46 @@ def _render(node: Node, out: list, parent_raw: bool) -> None:
         out.append(node.data if parent_raw else escape_html(node.data))
         return
     if t == COMMENT:
-        out.append("<!--")
-        out.append(node.data)
-        out.append("-->")
+        out.append("<!--" + node.data + "-->")
         return
-    tag = node.tag
-    out.append("<")
-    out.append(tag)
-    for k, v in node.attrs:
-        out.append(" ")
-        out.append(k)
-        out.append('="')
-        out.append(escape_html(v))
-        out.append('"')
-    if tag in VOID_ELEMENTS:
-        out.append("/>")
-        return
-    out.append(">")
-    # x/net/html render: re-emit the parse-dropped newline so a
-    # pre/listing/textarea whose text begins with "\n" round-trips
-    if tag in ("pre", "listing", "textarea"):
+    # Iterative, so a page nested thousands deep renders without recursion:
+    # the stack holds elements still to open and the finished markup of
+    # text, comments and end tags (plain strings), last child on top.
+    stack: list = [node]
+    while stack:
+        node = stack.pop()
+        if node.__class__ is str:
+            out.append(node)
+            continue
+        tag = node.tag
+        out.append("<")
+        out.append(tag)
+        for k, v in node.attrs:
+            out.append(" ")
+            out.append(k)
+            out.append('="')
+            out.append(escape_html(v))
+            out.append('"')
+        if tag in VOID_ELEMENTS:
+            out.append("/>")
+            continue
+        out.append(">")
+        # x/net/html render: re-emit the parse-dropped newline so a
+        # pre/listing/textarea whose text begins with "\n" round-trips
         kids = node.children
-        if kids and kids[0].type == TEXT and kids[0].data.startswith("\n"):
-            out.append("\n")
-    raw = tag in RAW_TEXT_ELEMENTS
-    for c in node.children:
-        _render(c, out, raw)
-    out.append("</")
-    out.append(tag)
-    out.append(">")
+        if tag in ("pre", "listing", "textarea"):
+            if kids and kids[0].type == TEXT and kids[0].data.startswith("\n"):
+                out.append("\n")
+        stack.append("</" + tag + ">")
+        raw = tag in RAW_TEXT_ELEMENTS
+        for c in reversed(kids):
+            t = c.type
+            if t == ELEMENT:
+                stack.append(c)
+            elif t == TEXT:
+                stack.append(c.data if raw else escape_html(c.data))
+            else:
+                stack.append("<!--" + c.data + "-->")
 
 
 # ---------------------------------------------------------------------------
@@ -704,7 +707,7 @@ class _TreeBuilder(HTMLParser):
         self.root = Element("#fragment") if fragment else Element("#document")
         if fragment:
             self.html = self.head = self.body = None
-            self.stack = [self.root]
+            self._reset_stack([self.root])
             self.body_started = True
         else:
             self.html = Element("html")
@@ -713,12 +716,8 @@ class _TreeBuilder(HTMLParser):
             self.root.append(self.html)
             self.html.append(self.head)
             self.html.append(self.body)
-            self.stack = [self.head]
+            self._reset_stack([self.head])
             self.body_started = False
-        # parallel to self.stack: the namespace of each open element
-        # ("" = HTML, "svg"/"math" = foreign content), per x/net/html's
-        # Node.Namespace (kept as a list so deep docs stay O(n))
-        self.ns = [""]
         # list of active formatting elements (Element | _MARKER sentinel)
         self.afe: list = []
         # frameset document: body was replaced by a root <frameset>
@@ -780,9 +779,31 @@ class _TreeBuilder(HTMLParser):
                 return None
         return None
 
+    def _reset_stack(self, stack: list) -> None:
+        """Replace the open-element stack with HTML-namespace ``stack``."""
+        self.stack = stack
+        # parallel to self.stack: the namespace of each open element
+        # ("" = HTML, "svg"/"math" = foreign content), per x/net/html's
+        # Node.Namespace (kept as a list so deep docs stay O(n))
+        self.ns = [""] * len(stack)
+        # tag -> number of open elements with that tag, in any namespace:
+        # a check for a tag that is not open answers without a stack scan
+        self.open = {}
+        for el in stack:
+            self.open[el.tag] = self.open.get(el.tag, 0) + 1
+
+    def _closed(self, el: Element) -> None:
+        """Count ``el`` out of ``self.open`` (it just left the stack)."""
+        n = self.open[el.tag] - 1
+        if n:
+            self.open[el.tag] = n
+        else:
+            del self.open[el.tag]
+
     def _push(self, el: Element, ns: str = "") -> None:
         self.ns.append(ns)
         self.stack.append(el)
+        self.open[el.tag] = self.open.get(el.tag, 0) + 1
 
     # -- foreign content (spec 13.2.6.5; x/net/html parseForeignContent) --
     @staticmethod
@@ -857,13 +878,14 @@ class _TreeBuilder(HTMLParser):
         return True
 
     def _truncate(self, i: int) -> None:
-        popped = self.stack[i:] if self.afe else None
+        popped = self.stack[i:]
         del self.stack[i:]
         del self.ns[i:]
+        for el in popped:
+            self._closed(el)
         if not self.stack:
-            self.stack = [self.body if not self.fragment else self.root]
-            self.ns = [""]
-        if popped:
+            self._reset_stack([self.body if not self.fragment else self.root])
+        if self.afe:
             for el in popped:
                 if el.tag in _AFE_MARKER_TAGS:
                     self._clear_afe_to_marker()
@@ -881,6 +903,7 @@ class _TreeBuilder(HTMLParser):
             if self.stack[i] is el:
                 del self.stack[i]
                 del self.ns[i]
+                self._closed(el)
                 return
 
     def _stack_index(self, el: Element) -> int:
@@ -905,6 +928,8 @@ class _TreeBuilder(HTMLParser):
 
     def _element_in_scope(self, tag: str) -> bool:
         """'has an element in (default) scope' — spec 13.2.4.2."""
+        if tag not in self.open:
+            return False
         for i in range(len(self.stack) - 1, -1, -1):
             if self.stack[i].tag == tag and not self.ns[i]:
                 return True
@@ -916,8 +941,9 @@ class _TreeBuilder(HTMLParser):
         """Spec "there is a template element on the stack of open
         elements" — the HTML-namespace element only; a foreign
         <svg:template> must not trip the form-pointer rules."""
-        return any(el.tag == "template" and not n
-                   for el, n in zip(self.stack, self.ns))
+        return "template" in self.open and any(
+            el.tag == "template" and not n
+            for el, n in zip(self.stack, self.ns))
 
     @staticmethod
     def _shallow_clone(el: Element) -> Element:
@@ -1018,6 +1044,8 @@ class _TreeBuilder(HTMLParser):
         """'Any other end tag' in body: pop through a match, but never
         across a special element."""
         adjusted = _SVG_TAG_ADJUST.get(tag)
+        if tag not in self.open and adjusted not in self.open:
+            return
         for i in range(len(self.stack) - 1, -1, -1):
             t = self.stack[i].tag
             if t == tag or (adjusted is not None and t == adjusted):
@@ -1075,6 +1103,7 @@ class _TreeBuilder(HTMLParser):
                 if not any(e is node for e in self.afe):
                     del self.stack[x]
                     del self.ns[x]
+                    self._closed(node)
                     continue
                 clone = self._shallow_clone(node)
                 self.afe[self.afe.index(node)] = clone
@@ -1104,12 +1133,12 @@ class _TreeBuilder(HTMLParser):
             fbi = self._stack_index(fb)
             self.stack.insert(fbi + 1, clone)
             self.ns.insert(fbi + 1, self.ns[fbi])
+            self.open[clone.tag] = self.open.get(clone.tag, 0) + 1
 
     def _start_body(self) -> None:
         if not self.body_started:
             self.body_started = True
-            self.stack = [self.body]
-            self.ns = [""]
+            self._reset_stack([self.body])
 
     def _generate_implied_end(self, except_tags: tuple = ()) -> None:
         """Spec 13.2.4 'generate implied end tags' (x/net/html
@@ -1137,7 +1166,8 @@ class _TreeBuilder(HTMLParser):
         # NOT set to quirks mode, and the stack of open elements has a p
         # element in button scope, then close a p element" — in quirks
         # the table nests inside the open <p>)
-        if tag in _P_CLOSERS or (tag == "table" and not self.quirks):
+        if "p" in self.open and (
+                tag in _P_CLOSERS or (tag == "table" and not self.quirks)):
             # spec: "close a p element" iff one is in BUTTON scope —
             # default scope boundaries (applet/caption/table/td/th/
             # marquee/object/template) plus button; a <p> outside an
@@ -1151,7 +1181,7 @@ class _TreeBuilder(HTMLParser):
                         or t in ("body", "#fragment")):
                     break
         closers = _IMPLIED_END.get(tag)
-        if closers:
+        if closers and not self.open.keys().isdisjoint(closers):
             if tag in ("li", "dd", "dt"):
                 # Spec li/dd/dt loop (13.2.6.4.7): close a matching open
                 # item, but STOP at any special element other than
@@ -1208,7 +1238,7 @@ class _TreeBuilder(HTMLParser):
             # and non-head elements must NOT imply the body (which would
             # reset the stack and leak template content into the body —
             # the head-template bug this guard fixes)
-            in_template = any(e.tag == "template" for e in self.stack)
+            in_template = "template" in self.open
             if tag == "html":
                 if in_template:
                     return
@@ -1247,8 +1277,7 @@ class _TreeBuilder(HTMLParser):
                     self.html.append(fs)
                     self.body_started = True
                     self.frameset_doc = True
-                    self.stack = [self.html, fs]
-                    self.ns = ["", ""]
+                    self._reset_stack([self.html, fs])
                 # frameset-ok false: parse error, token ignored
                 return
             if tag == "frame":
@@ -1293,7 +1322,7 @@ class _TreeBuilder(HTMLParser):
                 # with no open table these are in-select "anything else"
                 # and are ignored (`<select><table>` must NOT nest a
                 # table inside the select).
-                if not any(e.tag == "table" for e in self.stack):
+                if "table" not in self.open:
                     return
             else:
                 return  # parse error, ignore (includes col/colgroup)
@@ -1342,6 +1371,8 @@ class _TreeBuilder(HTMLParser):
         # Caption/Col/Colgroup/Frame/Tbody/Td/Tfoot/Th/Thead/Tr case).
         if tag in ("caption", "col", "colgroup", "frame", "tbody", "td",
                    "tfoot", "th", "thead", "tr"):
+            if "table" not in self.open and "template" not in self.open:
+                return
             for e in reversed(self.stack):
                 t = e.tag
                 if t in ("table", "template"):
@@ -1389,7 +1420,7 @@ class _TreeBuilder(HTMLParser):
 
         # "in table" <table> start tag: a new table closes the open one
         # unless we are inside a cell/caption (spec 13.2.6.4.9).
-        if tag == "table":
+        if tag == "table" and "table" in self.open:
             for i in range(len(self.stack) - 1, -1, -1):
                 t = self.stack[i].tag
                 if t in ("td", "th", "caption", "template", "html", "body",
@@ -1521,8 +1552,7 @@ class _TreeBuilder(HTMLParser):
             # in-body rule requires body in scope).
             if not self.frameset_doc:
                 if not self.body_started:
-                    if any(el.tag == "template" and not n
-                           for el, n in zip(self.stack, self.ns)):
+                    if self._html_template_open():
                         return  # in-template: ignored
                     self._start_body()
                 elif not self._element_in_scope("body"):
@@ -1581,18 +1611,22 @@ class _TreeBuilder(HTMLParser):
         if tag == "p":
             # Spec in-body </p>: close a p in BUTTON scope; with none
             # open, insert an empty <p> and close it immediately.
-            for i in range(len(self.stack) - 1, -1, -1):
-                t = self.stack[i].tag
-                if t == "p" and not self.ns[i]:
-                    self._truncate(i)
-                    return
-                if self._is_scope_stop(i) or t == "button":
-                    break
+            if "p" in self.open:
+                for i in range(len(self.stack) - 1, -1, -1):
+                    t = self.stack[i].tag
+                    if t == "p" and not self.ns[i]:
+                        self._truncate(i)
+                        return
+                    if self._is_scope_stop(i) or t == "button":
+                        break
             self._insert_element(Element("p"))
             return
         if tag in ("h1", "h2", "h3", "h4", "h5", "h6"):
             # Spec in-body heading end tag: ANY open heading in scope is
             # closed by any heading end tag (</h3> closes an <h1>).
+            if self.open.keys().isdisjoint(("h1", "h2", "h3", "h4", "h5",
+                                            "h6")):
+                return
             for i in range(len(self.stack) - 1, -1, -1):
                 t = self.stack[i].tag
                 if t in ("h1", "h2", "h3", "h4", "h5",
@@ -1606,12 +1640,13 @@ class _TreeBuilder(HTMLParser):
             self._any_other_end_tag(tag)
             return
         adjusted = _SVG_TAG_ADJUST.get(tag)
+        if tag not in self.open and adjusted not in self.open:
+            return  # no matching open tag: ignore
         for i in range(len(self.stack) - 1, -1, -1):
             t = self.stack[i].tag
             if t == tag or (adjusted is not None and t == adjusted):
                 self._truncate(i)
                 return
-        # no matching open tag: ignore
 
     def handle_data(self, data: str) -> None:
         if not data:

@@ -234,15 +234,13 @@ def find_main_content(doc: Document) -> Optional[Element]:
 
 
 def _find_table_based_content(doc: Document) -> Optional[Element]:
-    best = None
-    best_score = 0.0
-    for table in (d for d in doc.html.descendants() if d.tag == "table"):
-        for cell in (d for d in table.descendants() if d.tag == "td"):
-            s = scoring.score_element(cell)
-            if s > best_score:
-                best_score = s
-                best = cell
-    return best if best_score > 50 else None
+    # The reference scores each table's tds in turn, so a td of a nested
+    # table comes up once per enclosing table; first occurrences are the
+    # tds with a table ancestor in document order, and a repeat can never
+    # beat itself under find_best_element's strict >.
+    cells = [d for d in doc.html.descendants()
+             if d.tag == "td" and d.closest("table") is not None]
+    return scoring.find_best_element(cells, 50)
 
 
 def _find_content_by_scoring(doc: Document) -> Optional[Element]:

@@ -127,11 +127,16 @@ class Chain:
 
 
 class Selector:
-    __slots__ = ("chains", "source")
+    __slots__ = ("chains", "source", "head_tags")
 
     def __init__(self, chains: List[Chain], source: str) -> None:
         self.chains = chains
         self.source = source
+        # the tags a match can have, when every chain names one: sweeps
+        # skip other elements without a match call
+        heads = [c.steps[0][0].tag for c in chains]
+        self.head_tags = (frozenset(heads)
+                          if None not in heads and "*" not in heads else None)
 
     def match(self, el: Element) -> bool:
         for c in self.chains:
@@ -141,6 +146,10 @@ class Selector:
 
     def find_all(self, root: Element) -> List[Element]:
         """All descendant elements of root (excluding root) matching, doc order."""
+        tags = self.head_tags
+        if tags is not None:
+            return [el for el in root.descendants()
+                    if el.tag in tags and self.match(el)]
         return [el for el in root.descendants() if self.match(el)]
 
     def find_first(self, root: Element) -> Optional[Element]:

@@ -86,12 +86,6 @@ def standardize_spaces(element: Element) -> None:
     """content.go:264-325 (byte-length NBSP quirk, see module docstring)."""
 
     def process(node) -> None:
-        if node.type == ELEMENT:
-            if node.tag in ("pre", "code"):
-                return
-            for child in list(node.children):
-                process(child)
-            return
         if node.type == TEXT:
             text = node.data
 
@@ -111,7 +105,15 @@ def standardize_spaces(element: Element) -> None:
             if new_text != text:
                 node.data = new_text
 
-    process(element)
+    # nodes in document order, pre/code subtrees skipped; iterative, so a
+    # page nested thousands deep does not hit the recursion limit
+    stack = [element]
+    while stack:
+        node = stack.pop()
+        if node.type != ELEMENT:
+            process(node)
+        elif node.tag not in ("pre", "code"):
+            stack.extend(node.children[::-1])
 
 
 # -- T2 ---------------------------------------------------------------------
@@ -357,13 +359,13 @@ def flatten_wrapper_elements(element: Element) -> None:
                 return True
 
         # Case 6: nested under block ancestors and no direct inline content
-        nesting_depth = 0
+        # (the reference counts them; only "any" matters, so stop at one)
+        nested = False
         parent = el.parent
-        while parent is not None:
-            if parent.type == ELEMENT and parent.tag in constants.BLOCK_ELEMENTS_SET:
-                nesting_depth += 1
+        while parent is not None and not nested:
+            nested = parent.type == ELEMENT and parent.tag in constants.BLOCK_ELEMENTS_SET
             parent = parent.parent
-        if nesting_depth > 0 and not _has_direct_inline_content(el):
+        if nested and not _has_direct_inline_content(el):
             el.unwrap()
             return True
 
@@ -378,9 +380,15 @@ def flatten_wrapper_elements(element: Element) -> None:
 
     def process_remaining() -> bool:
         modified = False
-        all_elements = [d for d in element.descendants()
-                        if d.tag in constants.BLOCK_ELEMENTS_SET]
-        all_elements.sort(key=lambda e: -e.ancestor_count())
+        # deepest first (stable: document order within a depth); depths
+        # relative to ``element`` order the same as ancestor counts
+        depth = {id(element): 0}
+        all_elements = []
+        for d in element.descendants():
+            depth[id(d)] = depth[id(d.parent)] + 1
+            if d.tag in constants.BLOCK_ELEMENTS_SET:
+                all_elements.append(d)
+        all_elements.sort(key=lambda e: -depth[id(e)])
         for el in all_elements:
             if process_element(el):
                 modified = True
@@ -417,8 +425,6 @@ def strip_unwanted_attributes(element: Element, debug: bool) -> None:
 
     def process(el: Element) -> None:
         tag = el.tag
-        if tag == "svg" or _inside_svg(el):
-            return
         kept = []
         for k, v in el.attrs:
             name = k.lower()
@@ -447,9 +453,16 @@ def strip_unwanted_attributes(element: Element, debug: bool) -> None:
             p = p.parent
         return False
 
-    process(element)
-    for el in element.descendants():
-        process(el)
+    # svg subtrees keep their attributes: one walk that stops at each svg,
+    # not an ancestor scan per element
+    if _inside_svg(element):
+        return
+    stack = [element]
+    while stack:
+        el = stack.pop()
+        if el.tag != "svg":
+            process(el)
+            stack.extend(c for c in el.children if c.type == ELEMENT)
 
 
 # -- T7 ---------------------------------------------------------------------
@@ -464,10 +477,6 @@ def remove_empty_elements(element: Element) -> None:
             tag = el.tag
             if tag in constants.ALLOWED_EMPTY_ELEMENTS:
                 continue
-            text_content = el.text()
-            has_only_whitespace = not text_content.strip()
-            has_nbsp = " " in text_content
-
             has_no_children = True
             for child in el.children:
                 if child.type == TEXT:
@@ -489,7 +498,11 @@ def remove_empty_elements(element: Element) -> None:
                         empty.append(el)
                         continue
 
-            if has_only_whitespace and not has_nbsp and has_no_children:
+            # The reference also requires el's whole text to be whitespace
+            # without NBSP; with no element children and only such text
+            # children, it always is, so the per-element text() (quadratic
+            # on deep pages) is not built.
+            if has_no_children:
                 empty.append(el)
 
         if empty:
@@ -533,11 +546,6 @@ def remove_empty_lines(element: Element) -> None:
     """content.go:1523-1719 — two text-node cleanup passes."""
 
     def remove_empty_text_nodes(node) -> None:
-        if node.type == ELEMENT and node.tag in ("pre", "code"):
-            return
-        if node.type == ELEMENT:
-            for child in list(node.children):
-                remove_empty_text_nodes(child)
         if node.type == TEXT:
             text = node.data
             if not text or _EMPTY_TEXT_RE.match(text):
@@ -556,14 +564,7 @@ def remove_empty_lines(element: Element) -> None:
                     node.data = new_text
 
     def cleanup(node: Element) -> None:
-        if node.type != ELEMENT:
-            return
         tag = node.tag
-        if tag in ("pre", "code"):
-            return
-        for child in [c for c in node.children if c.type == ELEMENT]:
-            cleanup(child)
-
         is_block = tag in constants.BLOCK_ELEMENTS_SET or tag in _ADDITIONAL_BLOCK_SET
         pattern = _BLOCK_START_SPACE_RE if is_block else _INLINE_START_SPACE_RE
 
@@ -598,5 +599,22 @@ def remove_empty_lines(element: Element) -> None:
             if not has_space:
                 node.insert_before(Text(" "), nxt)
 
-    remove_empty_text_nodes(element)
-    cleanup(element)
+    # Both passes skip pre/code subtrees and walk without recursion, so a
+    # page nested thousands deep does not hit the recursion limit: text
+    # nodes in document order, then elements children-first.
+    stack = [element]
+    while stack:
+        node = stack.pop()
+        if node.type != ELEMENT:
+            remove_empty_text_nodes(node)
+        elif node.tag not in ("pre", "code"):
+            stack.extend(node.children[::-1])
+    stack = [(element, False)]
+    while stack:
+        node, children_done = stack.pop()
+        if children_done:
+            cleanup(node)
+        elif node.tag not in ("pre", "code"):
+            stack.append((node, True))
+            stack.extend((c, False) for c in node.children[::-1]
+                         if c.type == ELEMENT)
