@@ -276,19 +276,17 @@ def q_extract_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_extract_giant(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-tier giant-page skew path end-to-end (pipeline.py
-    giant_threshold_bytes): every 50th page is ~1 MB (its paragraph
-    repeated 2000x), routed through the dedicated maximally-scattered
-    giant tier while normal pages ride the salted main wave. The oracle
-    reproduces the repeated text byte-identically, so per-url identity
-    across the tier split is hash-asserted at the gate."""
+    """Giant-page skew path end-to-end: every 50th page is ~1 MB (its
+    paragraph repeated 2000x), and the ~1 MB giants ride the same single
+    url-hash-salted kernel wave as the normal pages (pipeline.py). The
+    oracle reproduces the repeated text byte-identically, so per-url
+    results for the giants are hash-asserted at the gate."""
     from defuddle_spark.spark.pages import synthesize_giant_pages
     from defuddle_spark.spark.pipeline import extract_pages
     pages = synthesize_giant_pages(spark, sf_dir)
     out = extract_pages(pages.select("url", "html"),
                         with_routing_column=False,
-                        salt_partitions=spark.sparkContext.defaultParallelism,
-                        giant_threshold_bytes=100_000)
+                        salt_partitions=spark.sparkContext.defaultParallelism)
     return out.select("url", "title", "extracted_text", "word_count")
 
 

@@ -231,8 +231,8 @@ def synthesize_giant_pages(spark: SparkSession, sf_dir: str,
     SURVEY.md §4.2): most pages are normal-sized, but every
     ``giant_every``-th doc's article paragraph is the text repeated
     ``repeats`` times — ~1 MB of HTML at the testdata's ~500-byte texts,
-    100x the median kernel time, the straggler shape the two-tier
-    ``giant_threshold_bytes`` path in extract_pages exists for.
+    the straggler shape extract_pages' url-hash salting spreads across
+    its one kernel wave.
 
     Extraction stays SQL-predictable per the synthesis contract:
     extracted_text is the space-joined repetition and word_count scales

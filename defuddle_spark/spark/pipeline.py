@@ -5,16 +5,19 @@ Arrow-batched kernel, everything structural is native so Catalyst can
 prune/push/coalesce):
 
     scan → filter(html nonempty) → [salted repartition by xxhash64(url)]
-         → routing column (native rlike) → mapInPandas(kernel) → sink
+         → mapInPandas(kernel) → routing column (native rlike) → sink
 
 Skew handling (SURVEY.md §4.2): HTML sizes are heavy-tailed; salting by
 url-hash spreads giant docs across partitions instead of letting a
-lexicographic url range concentrate them. At cluster scale set
-``salt_partitions`` ≈ 2-3x total cores; AQE re-coalesces afterwards.
+lexicographic url range concentrate them. Kernel cost is linear in page
+bytes, so one kernel wave over byte-balanced partitions needs no giant
+tier. At cluster scale set ``salt_partitions`` ≈ 2-3x total cores; AQE
+re-coalesces afterwards.
 """
 
 from __future__ import annotations
 
+import warnings
 from typing import Iterator, Optional
 
 import pandas as pd
@@ -116,15 +119,20 @@ def extract_pages(pages: DataFrame,
     Input must carry (url string, html binary); extra columns are pruned
     (column pruning reaches the parquet scan — only url+html are read).
 
-    Skew defenses (SURVEY.md §4.2, north_rule "skew handled explicitly"):
-    - ``salt_partitions``: repartition on xxhash64(url) so giant docs
-      scatter instead of clustering in a url-range;
-    - ``giant_threshold_bytes``: two-tier split — pages above the
-      threshold (heavy-tailed CC reality: multi-MB blobs that take
-      100x median kernel time) run through a dedicated maximally-scattered
-      pass, so a handful of monsters can't straggle the main wave. Output
-      is unionByName'd; per-url results are identical either way.
+    Skew defense (SURVEY.md §4.2, north_rule "skew handled explicitly"):
+    ``salt_partitions`` repartitions on xxhash64(url) so giant docs
+    scatter instead of clustering in a url range; without it, narrow
+    inputs are spread the same way and wide inputs keep their byte-sized
+    splits. The kernel then runs as one ``mapInPandas`` over that frame.
+
+    ``giant_threshold_bytes`` is deprecated and has no effect.
     """
+    if giant_threshold_bytes is not None:
+        warnings.warn(
+            "giant_threshold_bytes is ignored: the two-tier giant split was "
+            "removed because kernel cost is linear in page bytes, so one "
+            "salted kernel wave balances giant pages at lower cost",
+            DeprecationWarning, stacklevel=2)
     df = pages.select("url", "html").filter(
         F.col("html").isNotNull() & (F.length(F.col("html")) > 0))
 
@@ -133,35 +141,17 @@ def extract_pages(pages: DataFrame,
     # url-hash, the same skew defense as the explicit path. Inputs that
     # already carry a tuned shuffle partitioning should pass
     # salt_partitions explicitly.
-    if not salt_partitions and not df.isStreaming:
+    if salt_partitions:
+        df = df.repartition(salt_partitions, F.xxhash64(F.col("url")))
+    elif not df.isStreaming:
         from defuddle_spark.spark.partitions import spread_narrow
         df = spread_narrow(df, F.xxhash64(F.col("url")))
 
-    def _run(part: DataFrame) -> DataFrame:
-        return part.mapInPandas(
-            lambda it: _extract_batches(it, remove_images=remove_images,
-                                        kernel_options=kernel_options),
-            schema=RESULT_SCHEMA,
-        )
-
-    if giant_threshold_bytes:
-        small = df.filter(F.length("html") <= giant_threshold_bytes)
-        giant = df.filter(F.length("html") > giant_threshold_bytes)
-        if salt_partitions:
-            small = small.repartition(salt_partitions, F.xxhash64(F.col("url")))
-        # Scatter giants maximally: ROUND-ROBIN with an EXPLICIT partition
-        # count. Hash-scatter collides birthday-style when giants are few;
-        # and without an explicit count AQE's size-based coalescing stacks
-        # the byte-small partitions back together — giant cost is parse
-        # CPU, not bytes (measured: AQE coalesced 10x4MB giants into one
-        # partition, 2.8x slower than no split at all).
-        scatter = 2 * pages.sparkSession.sparkContext.defaultParallelism
-        giant = giant.repartition(scatter)
-        result = _run(small).unionByName(_run(giant))
-    else:
-        if salt_partitions:
-            df = df.repartition(salt_partitions, F.xxhash64(F.col("url")))
-        result = _run(df)
+    result = df.mapInPandas(
+        lambda it: _extract_batches(it, remove_images=remove_images,
+                                    kernel_options=kernel_options),
+        schema=RESULT_SCHEMA,
+    )
     if with_routing_column:
         result = result.withColumn("extractor_route", routing_column())
     return result

@@ -1,7 +1,9 @@
 """Spark integration: synthesis round-trip, manifests/resume, routing."""
 
 import os
+import re
 
+import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -104,7 +106,8 @@ def test_extraction_plan_prunes_columns(spark):
 
 
 def test_size_tiered_giant_routing(spark):
-    """Two-tier skew split produces identical per-url results (FIXTURES #16)."""
+    """The deprecated giant_threshold_bytes keyword warns and leaves
+    per-url results identical (FIXTURES #16)."""
     from defuddle_spark.spark.pages import synthesize_pages
     from defuddle_spark.spark.pipeline import extract_pages
 
@@ -120,10 +123,11 @@ def test_size_tiered_giant_routing(spark):
         .otherwise(F.col("html")))
     plain = {r["url"]: r["extracted_text"]
              for r in extract_pages(pages, with_routing_column=False).collect()}
-    tiered = {r["url"]: r["extracted_text"]
-              for r in extract_pages(pages, with_routing_column=False,
-                                     giant_threshold_bytes=20000,
-                                     salt_partitions=8).collect()}
+    with pytest.warns(DeprecationWarning, match="giant split was removed"):
+        tiered_df = extract_pages(pages, with_routing_column=False,
+                                  giant_threshold_bytes=20000,
+                                  salt_partitions=8)
+    tiered = {r["url"]: r["extracted_text"] for r in tiered_df.collect()}
     assert plain == tiered
     assert len(tiered) == 60
 
@@ -164,9 +168,9 @@ def test_selection_path_archetypes(spark):
 
 
 def test_giant_two_tier_byte_identity(spark):
-    """The two-tier giant split (giant_threshold_bytes) must be a pure
-    scheduling decision: per-url results byte-identical to the single-tier
-    path on a corpus with planted ~1MB giants."""
+    """Passing the deprecated giant_threshold_bytes keyword changes
+    nothing: per-url results byte-identical to the call without it on a
+    corpus with planted ~1MB giants."""
     from defuddle_spark.spark.pages import synthesize_giant_pages
     from defuddle_spark.spark.pipeline import extract_pages
     pages = synthesize_giant_pages(spark, "/root/testdata/sf0.001").filter(
@@ -175,13 +179,46 @@ def test_giant_two_tier_byte_identity(spark):
             "retry_used", "error"]
     one = {r["url"]: r for r in extract_pages(
         pages, with_routing_column=False).select(*cols).collect()}
-    two = {r["url"]: r for r in extract_pages(
-        pages, with_routing_column=False,
-        giant_threshold_bytes=100_000).select(*cols).collect()}
+    with pytest.warns(DeprecationWarning):
+        two_df = extract_pages(pages, with_routing_column=False,
+                               giant_threshold_bytes=100_000)
+    two = {r["url"]: r for r in two_df.select(*cols).collect()}
     assert set(one) == set(two) and len(one) == 120
     assert any(len(r["extracted_text"]) > 500_000 for r in one.values())
     for url, r in one.items():
         assert tuple(r) == tuple(two[url]), url
+
+
+def _final_plan(df) -> str:
+    """The executed physical plan after ``df`` has run (AQE's final plan,
+    without the initial plan it also prints)."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return plan.toString()
+
+
+def test_extraction_is_one_kernel_wave(spark):
+    """Whatever giant_threshold_bytes says, extraction runs one
+    mapInPandas over one scan of the input, with no round-robin scatter:
+    on a narrow input (spread by url hash) and with an explicit
+    salt_partitions."""
+    from defuddle_spark.spark.pages import synthesize_pages
+    from defuddle_spark.spark.pipeline import extract_pages
+
+    pages = synthesize_pages(spark, SF).select("url", "html")
+    for kw in ({}, {"salt_partitions": 8}):
+        with pytest.warns(DeprecationWarning):
+            out = extract_pages(pages, giant_threshold_bytes=2000, **kw)
+        plan = _final_plan(out)
+        nodes = [m.group(1) for m in
+                 (re.match(r"[\s:+\-|]*(?:\*\(\d+\)\s*)?(\w+)", line)
+                  for line in plan.splitlines()) if m]
+        assert nodes.count("MapInPandas") == 1, (kw, plan)
+        assert sum("Scan" in n for n in nodes) == 1, (kw, plan)
+        assert "RoundRobinPartitioning" not in plan, (kw, plan)
+        assert "hashpartitioning(xxhash64(url" in plan, (kw, plan)
 
 
 def test_result_sink_dispatch(spark, tmp_path):
