@@ -217,7 +217,7 @@ def q_extract_noimages(spark: SparkSession, sf_dir: str) -> DataFrame:
     from defuddle_spark.spark.pipeline import extract_pages
     pages = _pages(spark, sf_dir).filter(F.col("doc_id") % 3 == 0)
     out = extract_pages(pages.select("url", "html"), with_routing_column=False,
-                        remove_images=True)
+                        kernel_options={"remove_images": True})
     return out.select("url", "content", "word_count")
 
 

@@ -2063,45 +2063,6 @@ def parse(html_str: str) -> Document:
     return Document(builder.root, builder.html, builder.head, builder.body)
 
 
-def clone_node(node: Node) -> Node:
-    """Deep-copy a subtree (iterative; ~5x cheaper than re-parsing)."""
-    t = node.type
-    if t == TEXT:
-        return Text(node.data)
-    if t == COMMENT:
-        return Comment(node.data)
-    root = Element(node.tag, [list(p) for p in node.attrs])
-    stack = [(node, root)]
-    while stack:
-        src, dst = stack.pop()
-        for child in src.children:
-            ct = child.type
-            if ct == TEXT:
-                c = Text(child.data)
-                c.parent = dst
-                dst.children.append(c)
-            elif ct == COMMENT:
-                c = Comment(child.data)
-                c.parent = dst
-                dst.children.append(c)
-            else:
-                c = Element(child.tag, [list(p) for p in child.attrs])
-                c.parent = dst
-                dst.children.append(c)
-                stack.append((child, c))
-    return root
-
-
-def clone_document(doc: Document) -> Document:
-    """Deep-copy a Document (used by the kernel's retry: one parse, two
-    independent mutation passes)."""
-    root = clone_node(doc.root)
-    html = next(c for c in root.children if c.type == ELEMENT and c.tag == "html")
-    head = next(c for c in html.children if c.type == ELEMENT and c.tag == "head")
-    body = next(c for c in html.children if c.type == ELEMENT and c.tag == "body")
-    return Document(root, html, head, body)
-
-
 def parse_fragment(fragment: str) -> list:
     builder = _TreeBuilder(fragment=True)
     try:

@@ -14,8 +14,9 @@ Reimplements the reference's parse pipeline over one HTML document:
 - countWords                /root/reference/defuddle.go:889-896
 - charset decode            /root/reference/defuddle.go:241-257
 
-The Spark job wraps `extract_batch` in mapInPandas (Arrow batches); this
-module itself is Spark-free so it can be unit-tested without a JVM.
+The Spark job (spark/pipeline.py) calls `extract_document_bytes` once per
+row inside mapInPandas (Arrow batches); this module itself is Spark-free so
+it can be unit-tested without a JVM.
 """
 
 from __future__ import annotations
@@ -23,19 +24,16 @@ from __future__ import annotations
 import json
 import re
 import time
-from dataclasses import dataclass, field, replace as _dc_replace
-from typing import Any, List, Optional
+from dataclasses import dataclass, field, replace
+from typing import List, Optional
 
 from . import constants, metadata, schema_org, scoring
 from .dom import Document, Element, parse
-from .selectors import compile_selector, find_all, find_first
+from .selectors import SelectorGroup, find_all
 from .standardize import standardize_content
 
 MIN_IMAGE_DIMENSION = 33  # defuddle.go:1538
 RETRY_WORD_THRESHOLD = 200  # defuddle.go:141
-
-_ENTRY_SELECTORS = [compile_selector(s) for s in constants.ENTRY_POINT_ELEMENTS
-                    if s != "body"]
 
 # Hand-coded dispatch tables for the 14 non-body entry selectors (all are
 # simple compounds: #id, .class, tag, or [role="..."]). Index = priority
@@ -50,7 +48,6 @@ _ENTRY_CLASSES = {
 _ENTRY_TAGS = {"article": 10, "main": 12}
 _ENTRY_ROLES = {"article": 11, "main": 13}
 _N_ENTRIES = 14
-from .selectors import SelectorGroup  # noqa: E402
 
 _EXACT_GROUP = SelectorGroup(constants.EXACT_SELECTORS)
 _PARTIAL_PATTERNS = [p.lower() for p in constants.PARTIAL_SELECTORS]
@@ -188,7 +185,7 @@ def collect_meta_tags(doc: Document) -> List[dict]:
 # Main-content selection (defuddle.go:647-749)
 # ---------------------------------------------------------------------------
 
-def find_main_content(doc: Document) -> Optional[Element]:
+def find_main_content(doc: Document) -> Element:
     # First match per entry selector captured in ONE walk (equivalent to
     # the reference's per-selector querySelector sweeps: each selector's
     # winner is its first doc-order match, then the first selector with
@@ -360,167 +357,130 @@ def count_words(content_html: str) -> int:
 # Parse pipeline
 # ---------------------------------------------------------------------------
 
-def _parse_internal(html_str: str, options: Options,
-                    _doc: Optional[Document] = None,
-                    _pre: Optional[tuple] = None) -> Result:
-    """defuddle.go:393-619 (generic path; extractor dispatch in extractors/).
+def _page_metadata(doc: Document, url: str) -> tuple:
+    """(schema.org items, meta tags, metadata) of the unmutated page."""
+    schema_items = schema_org.extract_schema_org(doc.html)
+    meta_tags = collect_meta_tags(doc)
+    return (schema_items, meta_tags,
+            metadata.extract(doc.html, schema_items, meta_tags, url))
 
-    ``_doc``/``_pre`` let the retry loop reuse the pristine parse and the
-    pre-mutation metadata (the reference re-parses and recomputes — the
-    values are pure functions of the unmutated document, so reuse is
-    output-equivalent; see extract_document).
-    """
+
+def _result(pre: tuple, content: str, text: str, **overrides) -> Result:
+    """A pass's Result: the page metadata in ``pre``, then ``overrides``.
+
+    countWords(content) reparses in the reference (defuddle.go:889-896);
+    serialize→parse→text is the identity on text content, so splitting
+    ``text`` is output-equivalent."""
+    schema_items, meta_tags, meta = pre
+    fields = {k: meta[k] for k in ("title", "description", "domain",
+                                   "favicon", "image", "published",
+                                   "author", "site")}
+    fields.update(overrides)
+    return Result(
+        content=content, extracted_text=text, word_count=len(text.split()),
+        schema_org=json.dumps(schema_items, ensure_ascii=False,
+                              separators=(",", ":")),
+        meta_tags=meta_tags, **fields)
+
+
+def _pass(doc: Document, pre: tuple, url: str, options: Options) -> Result:
+    """One parseInternal attempt (defuddle.go:393-619) on a freshly parsed
+    ``doc``; ``pre`` is its metadata, read before any mutation."""
     start = time.monotonic()
-    doc = _doc if _doc is not None else parse(html_str)
-
-    # Per-document debug tracking (defuddle.go:411-417); a disabled
-    # Debugger is a no-op shell, matching debug.NewDebugger(false).
-    from .debug import Debugger
-    dbg = Debugger(options.debug)
-    dbg.start_timer("total_parsing")
-    if dbg.enabled:
+    schema_items, _, meta = pre
+    dbg = None
+    if options.debug:  # defuddle.go:411-417
+        from .debug import Debugger
+        dbg = Debugger(True)
+        dbg.start_timer("total_parsing")
         dbg.set_statistics(
             originalElementCount=sum(1 for _ in doc.descendants()))
-
-    if _pre is not None:
-        schema_items, meta_tags, meta = _pre
         dbg.add_processing_step(
             "schema_org_extraction",
             f"Extracted {len(schema_items)} schema.org items",
             len(schema_items), "")
-    else:
-        dbg.start_timer("schema_extraction")
-        schema_items = schema_org.extract_schema_org(doc.html)
-        dbg.end_timer("schema_extraction")
-        dbg.add_processing_step(
-            "schema_org_extraction",
-            f"Extracted {len(schema_items)} schema.org items",
-            len(schema_items), "")
-        meta_tags = collect_meta_tags(doc)
-        meta = metadata.extract(doc.html, schema_items, meta_tags, options.url)
 
     # Site-specific extractor dispatch (defuddle.go:420-492)
     from .extractors import find_extractor  # local import to avoid cycles
-    extractor = find_extractor(doc, options.url, schema_items)
+    extractor = find_extractor(doc, url, schema_items)
     if extractor is not None and extractor.can_extract():
-        dbg.set_extractor_used(extractor.name())
+        name = extractor.name()
         extracted = extractor.extract()
-        site = extracted.variables.get("site", meta["site"]) if extracted.variables else meta["site"]
-        result = Result(
-            content=extracted.content_html,
-            title=extracted.variables.get("title") or meta["title"],
-            description=extracted.variables.get("description") or meta["description"],
-            domain=meta["domain"],
-            favicon=meta["favicon"],
-            image=extracted.variables.get("image") or meta["image"],
-            published=extracted.variables.get("published") or meta["published"],
-            author=extracted.variables.get("author") or meta["author"],
-            site=site,
-            word_count=count_words(extracted.content_html),
-            extractor_type=extractor.name().lower(),
-            schema_org=json.dumps(schema_items, ensure_ascii=False, separators=(",", ":")),
-            meta_tags=meta_tags,
-        )
-        result.extracted_text = parse(extracted.content_html).html.text()
-        _maybe_markdown(result, options)
-        if dbg.enabled:  # defuddle.go:485-488
-            dbg.end_timer("total_parsing")
-            dbg.add_processing_step(
-                "extractor",
-                "Used site-specific extractor: " + extractor.name(), 1, "")
-            result.debug_info = dbg.get_info()
-        result.parse_time_ms = int((time.monotonic() - start) * 1000)
-        return result
+        found = extracted.variables
+        content = extracted.content_html
+        result = _result(
+            pre, content, parse(content).html.text(),
+            title=found.get("title") or meta["title"],
+            description=found.get("description") or meta["description"],
+            image=found.get("image") or meta["image"],
+            published=found.get("published") or meta["published"],
+            author=found.get("author") or meta["author"],
+            site=found.get("site", meta["site"]),
+            extractor_type=name.lower())
+    else:
+        name = None
+        # defuddle.go:495-505 order: evaluate media queries (stubbed per
+        # the reference), find small images on the original doc, apply
+        # mobile styles. find_main_content never returns None: its last
+        # resort is doc.body, which parse always builds.
+        mobile_styles = evaluate_media_queries(doc)
+        small_images = find_small_images(doc)
+        apply_mobile_styles(doc, mobile_styles)
+        main = find_main_content(doc)
 
-    # defuddle.go:495-505 order: evaluate media queries (stubbed per the
-    # reference), find small images on the original doc, apply mobile styles
-    mobile_styles = evaluate_media_queries(doc)
-    small_images = find_small_images(doc)
-    apply_mobile_styles(doc, mobile_styles)
+        # Mutation phase on the whole working document (goquery no-clone
+        # quirk: removals apply inside the already-selected main content
+        # subtree too)
+        remove_small_images(doc, small_images)
+        if options.remove_images:
+            remove_all_images(doc)
+        remove_hidden_elements(doc)
+        scoring.score_and_remove(doc.html)
+        partial_removals = 0
+        if options.remove_exact_selectors or options.remove_partial_selectors:
+            partial_removals = remove_by_selector(
+                doc, options.remove_exact_selectors,
+                options.remove_partial_selectors)
+        # Opt-in E1-E6 processors run before standardization: in the TS
+        # original their rules are part of ELEMENT_STANDARDIZATION_RULES
+        # (mathRules, codeBlockRules, headingRules, imageRules precede the
+        # role rules inside standardizeElements), so they must see the
+        # pre-standardized tree.
+        _apply_element_processors(doc, options)
+        standardize_content(main, meta["title"], doc, options.debug)
+        result = _result(pre, main.inner_html(), main.text(),
+                         partial_removals=partial_removals)
 
-    main_content = find_main_content(doc)
-    if main_content is None:
-        content = doc.body.inner_html()
-        body_text = doc.body.text()
-        result = Result(
-            content=content,
-            extracted_text=body_text,
-            word_count=len(body_text.split()),
-            schema_org=json.dumps(schema_items, ensure_ascii=False, separators=(",", ":")),
-            meta_tags=meta_tags,
-            **{k: meta[k] for k in ("title", "description", "domain", "favicon",
-                                    "image", "published", "author", "site")},
-        )
-        if dbg.enabled:  # defuddle.go:533-537 (initial statistics kept)
-            dbg.end_timer("total_parsing")
-            dbg.add_processing_step(
-                "fallback", "Used fallback body content extraction", 1,
-                "No main content found")
-            result.debug_info = dbg.get_info()
-        result.parse_time_ms = int((time.monotonic() - start) * 1000)
-        return result
-
-    # Mutation phase on the whole working document (goquery no-clone quirk:
-    # removals apply inside the already-selected main content subtree too)
-    remove_small_images(doc, small_images)
-    if options.remove_images:
-        remove_all_images(doc)
-    remove_hidden_elements(doc)
-    scoring.score_and_remove(doc.html)
-    partial_removals = 0
-    if options.remove_exact_selectors or options.remove_partial_selectors:
-        partial_removals = remove_by_selector(
-            doc, options.remove_exact_selectors,
-            options.remove_partial_selectors)
-
-    # Opt-in E1-E6 processors run before standardization: in the TS original
-    # their rules are part of ELEMENT_STANDARDIZATION_RULES (mathRules,
-    # codeBlockRules, headingRules, imageRules precede the role rules inside
-    # standardizeElements), so they must see the pre-standardized tree.
-    _apply_element_processors(doc, options)
-
-    standardize_content(main_content, meta["title"], doc, options.debug)
-
-    content = main_content.inner_html()
-    extracted_text = main_content.text()
-    result = Result(
-        content=content,
-        extracted_text=extracted_text,
-        # countWords(content) reparses in the reference (defuddle.go:889-896);
-        # serialize→parse→text is the identity on text content, so counting
-        # the standardized tree's text directly is output-equivalent
-        word_count=len(extracted_text.split()),
-        schema_org=json.dumps(schema_items, ensure_ascii=False, separators=(",", ":")),
-        meta_tags=meta_tags,
-        partial_removals=partial_removals,
-        **{k: meta[k] for k in ("title", "description", "domain", "favicon",
-                                "image", "published", "author", "site")},
-    )
     _maybe_markdown(result, options)
-    if dbg.enabled:  # defuddle.go:599-615
+    if dbg is not None:
         dbg.end_timer("total_parsing")
-        dbg.add_processing_step(
-            "standard_parsing", "Used standard content extraction algorithm",
-            1, "")
-        # Final statistics recount "original" from d.doc — which IS the
-        # mutated workingDoc (workingDoc := d.doc, defuddle.go:502) — so
-        # original == final and removed == 0 in the reference's standard
-        # path. Replicated quirk, not a bug here.
-        n_final = sum(1 for _ in doc.descendants())
-        dbg.set_statistics(
-            originalElementCount=n_final,
-            finalElementCount=n_final,
-            removedElementCount=0,
-            wordCount=result.word_count,
-            characterCount=len(content),
-            imageCount=sum(1 for d in doc.html.descendants()
-                           if d.tag == "img"),
-            linkCount=sum(1 for d in doc.html.descendants() if d.tag == "a"),
-        )
+        if name is not None:  # defuddle.go:485-488
+            dbg.set_extractor_used(name)
+            dbg.add_processing_step(
+                "extractor", "Used site-specific extractor: " + name, 1, "")
+        else:  # defuddle.go:599-615
+            dbg.add_processing_step(
+                "standard_parsing",
+                "Used standard content extraction algorithm", 1, "")
+            # Final statistics recount "original" from d.doc — which IS
+            # the mutated workingDoc (workingDoc := d.doc, defuddle.go:502)
+            # — so original == final and removed == 0 in the reference's
+            # standard path. Replicated quirk, not a bug here.
+            n_final = sum(1 for _ in doc.descendants())
+            dbg.set_statistics(
+                originalElementCount=n_final,
+                finalElementCount=n_final,
+                removedElementCount=0,
+                wordCount=result.word_count,
+                characterCount=len(result.content),
+                imageCount=sum(1 for d in doc.html.descendants()
+                               if d.tag == "img"),
+                linkCount=sum(1 for d in doc.html.descendants()
+                              if d.tag == "a"),
+            )
         result.debug_info = dbg.get_info()
     result.parse_time_ms = int((time.monotonic() - start) * 1000)
     return result
-
 
 def _apply_element_processors(doc: Document, options: Options) -> None:
     """Opt-in E1-E6 stages (see Options docstring; all default off)."""
@@ -560,48 +520,31 @@ def extract_document(html_str: str, url: str = "",
                      options: Optional[Options] = None) -> Result:
     """Full Parse() with the word-count retry loop (defuddle.go:133-169).
 
-    Output-equivalent restructuring of the reference's retry: compute
-    schema/meta/metadata once on the pristine tree (the reference
-    recomputes identical values from a fresh parse), run the first pass
-    directly on that tree, and re-parse from source only if a retry
-    actually fires (the reference re-parses for both passes). A pass that
-    used a site extractor skips the retry: the reference's retry would
-    re-dispatch the same extractor, yield an equal word count, and keep
-    the first result.
+    An empty ``url`` falls back to ``options.url``. Output-equivalent
+    restructuring of the reference's retry: read the page metadata once on
+    the pristine tree (the reference recomputes identical values from a
+    fresh parse), run the first pass directly on that tree, and re-parse
+    from source only if a retry actually fires (the reference re-parses
+    for both passes). A pass that used a site extractor skips the retry:
+    the reference's retry would re-dispatch the same extractor, yield an
+    equal word count, and keep the first result.
     """
     if options is None:
         options = Options()
-    # Never mutate the caller's Options: the Arrow-batch path reuses one
-    # instance across a whole batch, and a field write here would leak the
-    # previous row's url into a row whose own url is empty (wrong
-    # domain/favicon/extractor routing). Build a per-call copy instead;
-    # an empty url keeps the caller's configured options.url, matching the
-    # reference's `url or options.url` fallback for the single-doc API.
-    if url and url != options.url:
-        options = _dc_replace(options, url=url)
+    url = url or options.url
     try:
-        doc0 = parse(html_str)
-        schema_items = schema_org.extract_schema_org(doc0.html)
-        meta_tags = collect_meta_tags(doc0)
-        meta = metadata.extract(doc0.html, schema_items, meta_tags, options.url)
-        pre = (schema_items, meta_tags, meta)
-
-        # First pass mutates doc0 in place — the retry (rare: needs BOTH a
-        # short result AND actual partial-selector removals) re-parses the
-        # pristine tree from source, exactly like the reference.
-        result = _parse_internal(html_str, options, _doc=doc0, _pre=pre)
-        # Retry-skip fast path: the retry differs from the first pass ONLY
-        # by remove_partial_selectors=False. If the first pass's partial
-        # branch removed zero elements, the retry pipeline is bit-identical
-        # to the first pass, so retry.word_count == result.word_count and
-        # the reference (defuddle.go:133-169) keeps the first result anyway.
+        doc = parse(html_str)
+        pre = _page_metadata(doc, url)
+        result = _pass(doc, pre, url, options)
+        # The retry differs from the first pass ONLY by
+        # remove_partial_selectors=False. If the first pass's partial
+        # branch removed nothing, the retry is bit-identical to it, and the
+        # reference keeps the first result anyway.
         if (result.word_count < RETRY_WORD_THRESHOLD
                 and result.extractor_type is None
                 and result.partial_removals > 0):
-            import dataclasses
-            retry_opts = dataclasses.replace(
-                options, remove_partial_selectors=False)
-            retry = _parse_internal(html_str, retry_opts, _pre=pre)
+            retry = _pass(parse(html_str), pre, url,
+                          replace(options, remove_partial_selectors=False))
             if retry.word_count > result.word_count:
                 retry.retry_used = True
                 return retry

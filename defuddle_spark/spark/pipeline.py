@@ -64,18 +64,17 @@ _RESULT_FIELDS = [f.name for f in RESULT_SCHEMA.fields]
 
 
 def _extract_batches(batches: Iterator[pd.DataFrame],
-                     remove_images: bool = False,
-                     kernel_options: Optional[dict] = None) -> Iterator[pd.DataFrame]:
-    """Arrow-batch kernel driver: one Python call per batch, one kernel call per doc.
+                     options) -> Iterator[pd.DataFrame]:
+    """Arrow-batch kernel loop: one Python call per batch, one kernel call
+    per doc, every doc under the same ``kernel.Options``.
 
     Imported lazily on executors; selector tables compile once per worker
     process (module-level caches in defuddle_spark.selectors).
     """
     import json as _json
 
-    from defuddle_spark.kernel import Options, extract_document_bytes
+    from defuddle_spark.kernel import extract_document_bytes
 
-    opts = Options(remove_images=remove_images, **(kernel_options or {}))
     for pdf in batches:
         rows = []
         for url, html in zip(pdf["url"].values, pdf["html"].values):
@@ -83,17 +82,11 @@ def _extract_batches(batches: Iterator[pd.DataFrame],
                 html = b""
             if isinstance(html, memoryview):
                 html = bytes(html)
-            r = extract_document_bytes(html, url=url, options=opts)
-            rows.append((
-                url, r.title, r.description, r.domain, r.favicon, r.image,
-                r.published, r.author, r.site, r.content, r.extracted_text,
-                r.word_count, r.parse_time_ms, r.extractor_type, r.schema_org,
-                r.meta_tags or [], r.retry_used, r.error,
-                _json.dumps(r.debug_info, ensure_ascii=False,
-                            separators=(",", ":"))
-                if r.debug_info is not None else None,
-                r.content_markdown,
-            ))
+            r = extract_document_bytes(html, url=url, options=options)
+            debug_json = None if r.debug_info is None else _json.dumps(
+                r.debug_info, ensure_ascii=False, separators=(",", ":"))
+            row = dict(vars(r), url=url, debug_json=debug_json)
+            rows.append([row[f] for f in _RESULT_FIELDS])
         yield pd.DataFrame(rows, columns=_RESULT_FIELDS)
 
 
@@ -110,7 +103,6 @@ def routing_column() -> F.Column:
 
 def extract_pages(pages: DataFrame,
                   salt_partitions: Optional[int] = None,
-                  remove_images: bool = False,
                   with_routing_column: bool = True,
                   giant_threshold_bytes: Optional[int] = None,
                   kernel_options: Optional[dict] = None) -> DataFrame:
@@ -125,8 +117,13 @@ def extract_pages(pages: DataFrame,
     inputs are spread the same way and wide inputs keep their byte-sized
     splits. The kernel then runs as one ``mapInPandas`` over that frame.
 
-    ``giant_threshold_bytes`` is deprecated and has no effect.
+    ``kernel_options`` are ``kernel.Options`` fields (for example
+    ``{"remove_images": True}``); an unknown key raises here, before any
+    job runs. ``giant_threshold_bytes`` is deprecated and has no effect.
     """
+    from defuddle_spark.kernel import Options
+
+    options = Options(**(kernel_options or {}))
     if giant_threshold_bytes is not None:
         warnings.warn(
             "giant_threshold_bytes is ignored: the two-tier giant split was "
@@ -147,11 +144,8 @@ def extract_pages(pages: DataFrame,
         from defuddle_spark.spark.partitions import spread_narrow
         df = spread_narrow(df, F.xxhash64(F.col("url")))
 
-    result = df.mapInPandas(
-        lambda it: _extract_batches(it, remove_images=remove_images,
-                                    kernel_options=kernel_options),
-        schema=RESULT_SCHEMA,
-    )
+    result = df.mapInPandas(lambda it: _extract_batches(it, options),
+                            schema=RESULT_SCHEMA)
     if with_routing_column:
         result = result.withColumn("extractor_route", routing_column())
     return result

@@ -47,6 +47,18 @@ def _with_files_per_trigger(reader, max_files_per_trigger: Optional[int]):
     return reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
 
 
+def _start(df, output_dir: str, checkpoint_dir: str, available_now: bool):
+    """Start ``df`` as an append-mode parquet stream into ``output_dir``;
+    ``available_now`` drains the input present now and stops."""
+    writer = (df.writeStream.format("parquet")
+              .option("path", output_dir)
+              .option("checkpointLocation", checkpoint_dir)
+              .outputMode("append"))
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def extract_pages_stream(spark: SparkSession, input_dir: str, output_dir: str,
                          checkpoint_dir: str,
                          available_now: bool = True,
@@ -63,14 +75,7 @@ def extract_pages_stream(spark: SparkSession, input_dir: str, output_dir: str,
 
     result = extract_pages(pages.select("url", "html"), with_routing_column=True)
 
-    writer = (result.writeStream
-              .format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(result, output_dir, checkpoint_dir, available_now)
 
 
 EVENTS_SCHEMA = StructType([
@@ -111,13 +116,7 @@ def windowed_counts_stream(spark: SparkSession, input_dir: str,
                 F.approx_count_distinct("user_id").alias("n_users_approx"))
            .select(F.col("w.start").alias("window_start"), "event_type",
                    "n_events", "avg_value", "n_users_approx"))
-    writer = (agg.writeStream.format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(agg, output_dir, checkpoint_dir, available_now)
 
 
 def sessionize_stream(spark: SparkSession, input_dir: str, output_dir: str,
@@ -139,13 +138,7 @@ def sessionize_stream(spark: SparkSession, input_dir: str, output_dir: str,
            .agg(F.count("*").alias("session_events"))
            .select("user_id", F.col("sw.start").alias("session_start"),
                    "session_events"))
-    writer = (agg.writeStream.format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(agg, output_dir, checkpoint_dir, available_now)
 
 
 DOCS_SCHEMA = StructType([
@@ -250,13 +243,7 @@ def dedup_exact_stream(spark: SparkSession, input_dir: str, output_dir: str,
            .applyInPandasWithState(
                first_seen, _DEDUP_OUT_SCHEMA, _DEDUP_STATE_SCHEMA,
                "append", timeout))
-    writer = (out.writeStream.format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(out, output_dir, checkpoint_dir, available_now)
 
 
 DOCS_TS_SCHEMA = StructType([
@@ -347,13 +334,7 @@ def dedup_exact_stream_watermark(spark: SparkSession, input_dir: str,
                first_seen, _DEDUP_OUT_SCHEMA,
                "min_id bigint, expires_ms bigint",
                "append", GroupStateTimeout.EventTimeTimeout))
-    writer = (out.writeStream.format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(out, output_dir, checkpoint_dir, available_now)
 
 
 def minhash_lsh_stream(spark: SparkSession, input_dir: str, output_dir: str,
@@ -444,10 +425,4 @@ def minhash_lsh_stream(spark: SparkSession, input_dir: str, output_dir: str,
                emit_pairs, "band int, id_a bigint, id_b bigint",
                "members array<bigint>, saturated boolean",
                "append", timeout))
-    writer = (out.writeStream.format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(out, output_dir, checkpoint_dir, available_now)

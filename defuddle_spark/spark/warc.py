@@ -826,13 +826,11 @@ def read_warc_stream(spark: SparkSession, path: str,
     same way the parquet page stream does."""
     types = tuple(warc_types or ())
     session_tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
-    reader = (spark.readStream.format("binaryFile")
-              .schema(_BINARY_FILE_SCHEMA))
-    if max_files_per_trigger is not None:
-        if int(max_files_per_trigger) < 1:
-            raise ValueError("max_files_per_trigger must be >= 1")
-        reader = reader.option("maxFilesPerTrigger",
-                               int(max_files_per_trigger))
+    from .streaming import _with_files_per_trigger
+
+    reader = _with_files_per_trigger(
+        spark.readStream.format("binaryFile").schema(_BINARY_FILE_SCHEMA),
+        max_files_per_trigger)
     files = reader.load(path)
     return files.select("path", "content").mapInPandas(
         _warc_gen(types, batch_rows, session_tz, resync_acc,

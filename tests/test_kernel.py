@@ -466,9 +466,11 @@ def test_retry_skip_is_output_equivalent():
 
     # Reference-faithful unconditional retry for comparison.
     opts = Options()
-    first = K._parse_internal(short_no_partial, opts)
-    retry = K._parse_internal(
-        short_no_partial,
+    doc = K.parse(short_no_partial)
+    pre = K._page_metadata(doc, "")
+    first = K._pass(doc, pre, "", opts)
+    retry = K._pass(
+        K.parse(short_no_partial), pre, "",
         dataclasses.replace(opts, remove_partial_selectors=False))
     expected = retry if retry.word_count > first.word_count else first
     assert fast.content == expected.content
@@ -592,3 +594,50 @@ def test_shared_options_url_never_leaks_across_documents():
     opts2 = Options(url="https://configured.example.org/x")
     r3 = extract_document(html, url="", options=opts2)
     assert r3.domain == "configured.example.org"
+
+
+def test_parse_count_per_document(monkeypatch):
+    """One parse per pass, plus one of an extractor's content for its text
+    and word count: 1 on a generic page, 2 on an extractor page, 2 on a
+    page that retries."""
+    from defuddle_spark import kernel as K
+
+    calls = []
+    real_parse = K.parse
+
+    def counting_parse(html):
+        calls.append(html)
+        return real_parse(html)
+
+    monkeypatch.setattr(K, "parse", counting_parse)
+
+    def parses(html, url=""):
+        calls.clear()
+        r = extract_document(html, url=url)
+        assert r.error is None
+        return len(calls), r
+
+    n, r = parses("<html><head><title>T</title></head><body><article>"
+                  "<p>body text here</p></article></body></html>",
+                  "https://example.com/post")
+    assert (n, r.extractor_type, r.retry_used) == (1, None, False)
+
+    github = """<html><head>
+        <meta name="expected-hostname" content="github.com">
+        <meta name="github-keyboard-shortcuts" content="">
+        <title>Test Issue · o/r</title></head><body>
+        <div data-testid="issue-title">Test Issue</div>
+        <div data-testid="issue-viewer-issue-container">
+            <div data-testid="issue-body-viewer"><div class="markdown-body">
+                <p>This is a test issue body.</p></div></div>
+        </div></body></html>"""
+    n, r = parses(github, "https://github.com/o/r/issues/1")
+    assert (n, r.extractor_type) == (2, "github")
+
+    body = "Recovered paragraph with enough words to win the retry pass. " * 24
+    n, r = parses(
+        "<html><head><title>R</title></head><body><main><article>"
+        "<h1>R</h1><p>Lead.</p>"
+        f'<section class="reader-comments-analysis"><p>{body}</p></section>'
+        "</article></main></body></html>")
+    assert (n, r.retry_used) == (2, True)

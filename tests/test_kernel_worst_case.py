@@ -222,6 +222,9 @@ def test_one_walk_stats_equal_brute_force_walks(doc):
         assert scoring.find_best_element(group) is _oracle_best(group)
     for el in candidates + cells:
         assert scoring.score_element(el) == _oracle_score(el)
+    # the kernel's last resort is doc.body, so there is no "no main
+    # content" case to fall back from
+    assert find_main_content(doc) is not None
 
 
 @given(_soup_doc())

@@ -354,3 +354,14 @@ def test_session_defaults_sized_from_host(monkeypatch):
     session.get_spark()
     assert captured["master"] == "local[5]"
     assert captured["spark.driver.memory"] == "2g"
+
+
+def test_unknown_kernel_option_raises_before_any_job(spark):
+    """A misspelled kernel option fails in extract_pages itself, before a
+    plan exists, instead of in every Python task at action time."""
+    from defuddle_spark.spark.pipeline import extract_pages
+
+    pages = spark.createDataFrame([("https://x.test/a", b"<html></html>")],
+                                  "url string, html binary")
+    with pytest.raises(TypeError, match="no_such"):
+        extract_pages(pages, kernel_options={"no_such": 1})
