@@ -20,6 +20,8 @@ from pyspark.sql.types import (
     StructField, StructType,
 )
 
+from defuddle_spark.spark.session import drop_zip_importers
+
 MEDIA_SCHEMA = StructType([
     StructField("media_id", LongType()),
     StructField("media_type", StringType()),     # image | audio | video
@@ -70,6 +72,7 @@ def extract_features(media: DataFrame, frame_stride: int = 256) -> DataFrame:
     standing in for decode→resize→embed.
     """
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in it:
             out = []
             for mid, mtype, payload in zip(pdf["media_id"], pdf["media_type"],
@@ -83,6 +86,7 @@ def extract_features(media: DataFrame, frame_stride: int = 256) -> DataFrame:
                 out.append((mid, mtype, len(buf), entropy,
                             hist16.tolist(), frames))
             yield pd.DataFrame(out, columns=[f.name for f in FEATURE_SCHEMA.fields])
+        drop_zip_importers()
 
     return (media.select("media_id", "media_type", "payload")
             .mapInPandas(batches, schema=FEATURE_SCHEMA))
@@ -99,6 +103,7 @@ def frame_sample(media: DataFrame, every_bytes: int = 512,
     ])
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in it:
             rows = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
@@ -106,5 +111,6 @@ def frame_sample(media: DataFrame, every_bytes: int = 512,
                 for idx in range(min(max_frames, max(1, len(raw) // every_bytes))):
                     rows.append((mid, idx, raw[idx * every_bytes:(idx + 1) * every_bytes]))
             yield pd.DataFrame(rows, columns=["media_id", "frame_idx", "frame"])
+        drop_zip_importers()
 
     return media.select("media_id", "payload").mapInPandas(batches, schema=schema)

@@ -18,6 +18,7 @@ from typing import List, Sequence
 from pyspark.sql import DataFrame, functions as F
 
 from defuddle_spark.spark.partitions import spread_narrow
+from defuddle_spark.spark.session import drop_zip_importers
 
 from .dedup import _let, _same_key_pairs
 
@@ -129,6 +130,7 @@ def cosine_neardup_pairs(embeddings: DataFrame, threshold: float = 0.9,
     guard = threshold - 10.0 ** (-round_digits)
 
     def gen(it):
+        drop_zip_importers()
         ids_b, mn = bc.value
         for pdf in it:
             if not len(pdf):
@@ -141,6 +143,7 @@ def cosine_neardup_pairs(embeddings: DataFrame, threshold: float = 0.9,
             id_a, id_b = a_ids[ia], ids_b[ib]
             keep = id_a < id_b
             yield pd.DataFrame({"id_a": id_a[keep], "id_b": id_b[keep]})
+        drop_zip_importers()
 
     from pyspark.sql.types import StructField, StructType
 
@@ -220,6 +223,7 @@ def cosine_neardup_pairs_blocked(embeddings: DataFrame,
     guard = threshold - 10.0 ** (-round_digits)
 
     def block_pair(key, lpdf, rpdf):
+        drop_zip_importers()
         if not len(lpdf) or not len(rpdf):
             return pd.DataFrame({"id_a": [], "id_b": []})
         ia = lpdf[id_col].to_numpy()

@@ -6,13 +6,23 @@ the sandbox has no Iceberg catalog; on a real deployment the same
 protocol rides Iceberg snapshot commits / WAP):
 
 - the corpus is bucketed by ``pmod(xxhash64(url), num_buckets)``;
-- buckets are processed in groups; each group is one Spark job whose
-  output lands under ``out_dir`` partitioned by bucket, followed by an
-  atomic manifest append (bucket id, doc count, error count, bytes in,
-  wall seconds, kernel version) — the manifest row IS the commit record;
+- buckets are processed in groups; each group is one Spark job that
+  writes its rows under ``out_dir`` partitioned by bucket, in dynamic
+  partition-overwrite mode: the write replaces exactly the group's
+  bucket directories and leaves every other bucket alone;
+- the group's stats (doc count, error count, content bytes) are read
+  back from those directories, and one atomic manifest file per group
+  (bucket id, stats, wall seconds, kernel version) is the commit
+  record — a bucket without a manifest row is not committed, whatever
+  its directory holds;
 - resume = re-run the same call: committed buckets are read from the
-  manifest and anti-joined away, so a job killed mid-group redoes only
-  that group, with no duplicate or missing urls.
+  manifest and skipped, and the rest are redone. Bucket membership is
+  a pure function of the url, so a redo overwrites whatever a crashed
+  attempt left in its buckets (a crash after the write but before the
+  record included), and each url appears exactly once.
+
+Each group still filters the whole input on the computed ``bucket``,
+so a job reads its input ``ceil(num_buckets / group_size)`` times.
 """
 
 from __future__ import annotations
@@ -78,7 +88,9 @@ def run_extraction_job(spark: SparkSession, pages: DataFrame, out_dir: str,
                                salt_partitions=salt_partitions,
                                with_routing_column=False)
         result = with_bucket(result, num_buckets)
-        (result.write.mode("append").partitionBy("bucket").parquet(out_dir))
+        (result.write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("bucket").parquet(out_dir))
 
         stats = (spark.read.parquet(out_dir)
                  .filter(F.col("bucket").isin(group))

@@ -27,6 +27,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .session import drop_zip_importers
+
 RESULT_SCHEMA = StructType([
     StructField("url", StringType()),
     StructField("title", StringType()),
@@ -75,6 +77,7 @@ def _extract_batches(batches: Iterator[pd.DataFrame],
 
     from defuddle_spark.kernel import extract_document_bytes
 
+    drop_zip_importers()
     for pdf in batches:
         rows = []
         for url, html in zip(pdf["url"].values, pdf["html"].values):
@@ -88,6 +91,7 @@ def _extract_batches(batches: Iterator[pd.DataFrame],
             row = dict(vars(r), url=url, debug_json=debug_json)
             rows.append([row[f] for f in _RESULT_FIELDS])
         yield pd.DataFrame(rows, columns=_RESULT_FIELDS)
+    drop_zip_importers()
 
 
 def routing_column() -> F.Column:

@@ -20,8 +20,44 @@ Scale rationale (100 TB / 1000-executor design; tested on local[N]):
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
+
+
+def drop_zip_importers() -> None:
+    """Delete every ``zipimporter`` from ``sys.path_importer_cache``.
+
+    Every function Spark runs in Python calls this first, after its own
+    imports. PySpark's worker calls ``importlib.invalidate_caches()`` at
+    the start of every task (``pyspark/worker_util.py``), and on CPython
+    3.11 and 3.12 that makes each cached ``zipimporter`` (the pyspark and
+    py4j zips and the spark-core jar on the worker path, one per package
+    directory inside them, and any ``--py-files`` zip) re-read its
+    archive's directory: most of the ~0.3 host CPU-s a Python task costs
+    before it runs any code. With none cached, the next task's sweep has
+    nothing to re-read; ``PathFinder`` rebuilds an importer on demand
+    from ``zipimport._zip_directory_cache`` without reading the archive.
+    Batch generators call it once more when their input runs out: a
+    worker's first batch makes PySpark import modules lazily (Arrow to
+    pandas pulls in ``concurrent.futures``), which caches root importers
+    again after the first call.
+
+    That cache cannot go stale: on PySpark 4.1.2, Spark does not
+    overwrite a path already added with ``--py-files``/``addPyFile``
+    (``SparkContext.addFile`` logs "has been added already. Overwriting
+    of added paths is not supported" and keeps the first file), so no
+    archive changes under a running worker.
+
+    Delete this once workers run CPython >= 3.13, whose ``zipimporter``
+    re-reads its directory lazily, on the next lookup after an
+    invalidation, instead of inside ``invalidate_caches()``.
+    """
+    cache = sys.path_importer_cache
+    for path in [p for p, f in cache.items()
+                 if isinstance(f, zipimport.zipimporter)]:
+        del cache[path]
 
 
 ROCKSDB_STATE_CONF = {

@@ -22,6 +22,7 @@ from pyspark.sql.types import (BinaryType, DoubleType, LongType, StringType,
                                StructField, StructType, TimestampType)
 
 from .pipeline import extract_pages
+from .session import drop_zip_importers
 
 PAGES_SCHEMA = StructType([
     StructField("url", StringType()),
@@ -216,6 +217,7 @@ def dedup_exact_stream(spark: SparkSession, input_dir: str, output_dir: str,
 
     def first_seen(key, pdfs, state):
         import pandas as pd
+        drop_zip_importers()
         if state_ttl_ms is not None and state.hasTimedOut:
             state.remove()  # cold hash: evict; later dupes re-emit
             return
@@ -291,6 +293,7 @@ def dedup_exact_stream_watermark(spark: SparkSession, input_dir: str,
 
     def first_seen(key, pdfs, state):
         import pandas as pd
+        drop_zip_importers()
         if state.hasTimedOut:
             state.remove()  # quiet expired hash: evict; later dupes re-emit
             return
@@ -380,6 +383,7 @@ def minhash_lsh_stream(spark: SparkSession, input_dir: str, output_dir: str,
 
     def emit_pairs(key, pdfs, state):
         import pandas as pd
+        drop_zip_importers()
         if state_ttl_ms is not None and state.hasTimedOut:
             state.remove()  # cold bucket: evict members wholesale
             return

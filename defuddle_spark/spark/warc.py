@@ -46,6 +46,8 @@ from pyspark.sql.types import (BinaryType, IntegerType, LongType,
                                StringType, StructField, StructType,
                                TimestampType)
 
+from .session import drop_zip_importers
+
 WARC_SCHEMA = StructType([
     StructField("url", StringType()),
     StructField("warc_ts", TimestampType()),
@@ -784,6 +786,7 @@ def _warc_gen(types: tuple, batch_rows: int, session_tz: str,
     def gen(batches):
         import pandas as pd
 
+        drop_zip_importers()
         cols = [f.name for f in WARC_SCHEMA.fields]
         for pdf in batches:
             for path_, content in zip(pdf["path"], pdf["content"]):
@@ -797,6 +800,7 @@ def _warc_gen(types: tuple, batch_rows: int, session_tz: str,
                         rows = []
                 if rows:
                     yield pd.DataFrame(rows, columns=cols)
+        drop_zip_importers()
     return gen
 
 
@@ -932,6 +936,7 @@ def write_warc(df: DataFrame, out_dir: str, records_per_file: int = 256,
         import pandas as pd
         from pyspark import TaskContext
 
+        drop_zip_importers()
         os.makedirs(out_dir, exist_ok=True)
         tc = TaskContext.get()
         pid, attempt = tc.partitionId(), tc.taskAttemptId()
@@ -1003,5 +1008,6 @@ def write_warc(df: DataFrame, out_dir: str, records_per_file: int = 256,
         manifest.extend(close_file())
         if manifest:
             yield pd.DataFrame(manifest, columns=["warc_path", "records"])
+        drop_zip_importers()
 
     return df.mapInPandas(gen, WARC_WRITE_SCHEMA)

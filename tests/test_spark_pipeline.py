@@ -70,6 +70,57 @@ def test_resume_after_partial_failure(spark, tmp_path):
     pages.unpersist()
 
 
+def test_resume_after_crash_between_write_and_record(spark, tmp_path,
+                                                     monkeypatch):
+    """A crash after a group's rows are written but before its manifest
+    record lands leaves rows the manifest does not know. The resume
+    redoes that group and must replace them: every url once, the
+    manifest's doc_count equal to the input count, and the same rows a
+    crash-free run writes."""
+    from defuddle_spark.spark import manifest
+    from defuddle_spark.spark.pages import synthesize_pages
+
+    pages = synthesize_pages(spark, SF).select("url", "html").cache()
+    n_total = pages.count()
+    out_dir, man_dir = str(tmp_path / "out"), str(tmp_path / "manifest")
+
+    append = manifest._append_manifest
+    calls = []
+
+    def crash_on_second_record(manifest_dir, records):
+        calls.append(len(records))
+        if len(calls) == 2:
+            raise RuntimeError("injected crash before the commit record")
+        append(manifest_dir, records)
+
+    monkeypatch.setattr(manifest, "_append_manifest", crash_on_second_record)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        manifest.run_extraction_job(spark, pages, out_dir, man_dir,
+                                    num_buckets=8, group_size=2)
+    monkeypatch.setattr(manifest, "_append_manifest", append)
+    assert len(manifest.committed_buckets(spark, man_dir)) == 2
+    assert spark.read.parquet(out_dir).count() > 0
+
+    m = manifest.run_extraction_job(spark, pages, out_dir, man_dir,
+                                    num_buckets=8, group_size=2)
+    assert m["buckets_done_before"] == 2 and m["groups_run"] == 3
+
+    final = spark.read.parquet(out_dir)
+    assert final.count() == n_total
+    assert final.select("url").distinct().count() == n_total
+    assert spark.read.json(man_dir).agg(F.sum("doc_count")).head()[0] == n_total
+
+    clean_dir = str(tmp_path / "clean")
+    manifest.run_extraction_job(spark, pages, clean_dir,
+                                str(tmp_path / "clean_manifest"),
+                                num_buckets=8, group_size=2)
+    cols = [c for c in final.columns if c != "parse_time_ms"]
+    clean = spark.read.parquet(clean_dir).select(cols)
+    assert final.select(cols).exceptAll(clean).count() == 0
+    assert clean.exceptAll(final.select(cols)).count() == 0
+    pages.unpersist()
+
+
 def test_routing_column_native(spark):
     from defuddle_spark.spark.pipeline import extract_pages
     rows = [
@@ -365,3 +416,146 @@ def test_unknown_kernel_option_raises_before_any_job(spark):
                                   "url string, html binary")
     with pytest.raises(TypeError, match="no_such"):
         extract_pages(pages, kernel_options={"no_such": 1})
+
+
+@pytest.mark.parametrize("py_files", [False, True], ids=["local", "py_files"])
+def test_stage_function_leaves_no_zip_importer_to_rescan(spark, tmp_path,
+                                                          py_files):
+    """PySpark invalidates the import caches at every task start, which
+    on CPython < 3.13 re-reads the directory of every cached zipimporter.
+    The extraction stage function drops them, so from a worker's second
+    task on none is cached at entry. With ``py_files`` the package also
+    ships as a zip through ``addPyFile`` (the ``spark-submit
+    --py-files`` deployment), which puts its own zip on every worker's
+    path."""
+    import sys
+    import zipfile
+
+    import pandas as pd
+
+    from defuddle_spark.kernel import Options
+    from defuddle_spark.spark.pipeline import _extract_batches
+
+    zip_name = "defuddle_spark_pyfiles.zip"
+    if py_files:
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        zip_path = str(tmp_path / zip_name)
+        with zipfile.ZipFile(zip_path, "w") as zf:
+            for d, _, files in os.walk(os.path.join(root, "defuddle_spark")):
+                for f in files:
+                    if f.endswith(".py"):
+                        full = os.path.join(d, f)
+                        zf.write(full, os.path.relpath(full, root))
+        driver_path = list(sys.path)
+        # stays on the suite's workers for good; it holds the same
+        # package, which they import from the repo first anyway
+        spark.sparkContext.addPyFile(zip_path)
+        sys.path[:] = driver_path  # only the workers need the zip
+    options = Options()
+
+    def probe(batches):
+        import importlib.util
+        import os
+        import sys
+        import time
+        import zipimport
+        cached = sum(isinstance(f, zipimport.zipimporter)
+                     for f in sys.path_importer_cache.values())
+        entered = time.monotonic_ns()
+        # a lookup that misses walks every path entry and caches a
+        # finder for each, the package's own zip included
+        assert importlib.util.find_spec("defuddle_spark_no_such") is None
+        zip_cached = sum(p.endswith(zip_name) and
+                         isinstance(f, zipimport.zipimporter)
+                         for p, f in sys.path_importer_cache.items())
+        for _ in _extract_batches(batches, options):
+            pass
+        yield pd.DataFrame({
+            "pid": [os.getpid()], "entered": [entered], "cached": [cached],
+            "zip_cached": [zip_cached]})
+
+    pages = spark.range(0, 12, 1, 12).select(
+        F.concat(F.lit("https://x.test/"), F.col("id").cast("string"))
+        .alias("url"),
+        F.lit("<html><body><p>one</p></body></html>").cast("binary")
+        .alias("html"))
+    rows = (pages.mapInPandas(
+        probe, "pid long, entered long, cached long, zip_cached long")
+        .toPandas().sort_values(["pid", "entered"]))
+    assert len(rows) == 12
+    assert (rows["zip_cached"] == int(py_files)).all()
+    later = rows[rows.duplicated("pid")]  # each worker's second task on
+    assert len(later) > 0
+    assert later["cached"].tolist() == [0] * len(later)
+
+
+_TEARDOWN_SCRIPT = """
+import os, sys, tempfile
+root, bench = sys.argv[1], sys.argv[2]
+sys.path[:0] = [root, bench]
+from defuddle_spark.spark.session import get_spark
+from defuddle_spark.spark.pipeline import extract_pages
+from defuddle_spark.spark.streaming import DOCS_SCHEMA, dedup_exact_stream
+import harness
+
+spark = get_spark(cores=2)
+spark.sparkContext.setLogLevel("ERROR")
+pages = spark.createDataFrame(
+    [(f"https://x.test/{i}", b"<html><body><p>page</p></body></html>")
+     for i in range(8)], "url string, html binary")
+assert extract_pages(pages).count() == 8
+tmp = tempfile.mkdtemp()
+spark.createDataFrame([(i, f"t{i % 3}") for i in range(6)],
+                      DOCS_SCHEMA).write.parquet(f"{tmp}/in")
+q = dedup_exact_stream(spark, f"{tmp}/in", f"{tmp}/out", f"{tmp}/ckpt")
+q.awaitTermination()
+assert spark.read.parquet(f"{tmp}/out").count() == 3
+harness.stop_jvm()
+"""
+
+
+def _session_members(sid: int) -> list:
+    """Live (non-zombie) processes whose session id is ``sid``."""
+    members = []
+    for name in os.listdir("/proc"):
+        if not name.isdigit():
+            continue
+        try:
+            with open(f"/proc/{name}/stat") as f:
+                stat = f.read()
+        except OSError:
+            continue
+        fields = stat[stat.rindex(")") + 2:].split()
+        if fields[0] != "Z" and int(fields[3]) == sid:
+            members.append(int(name))
+    return members
+
+
+def test_no_process_outlives_a_run(tmp_path):
+    """A run of its own (extraction plus one applyInPandasWithState
+    stage on local[2]) that stops the gateway the way perfbench does
+    leaves no process behind: 5 s after it exits, nothing of its session
+    (the JVM, the pyspark daemon, forked workers, or anything they
+    started) is alive. Output goes to a file, not a pipe, so a leftover
+    holding the pipe cannot make the wait outlast it."""
+    import subprocess
+    import sys
+    import time
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g")
+    log = tmp_path / "run.log"
+    with open(log, "wb") as out:
+        proc = subprocess.Popen(
+            [sys.executable, "-c", _TEARDOWN_SCRIPT, root,
+             os.path.join(root, "perfbench")],
+            cwd=root, env=env, start_new_session=True,
+            stdout=out, stderr=subprocess.STDOUT)
+    try:
+        proc.wait(timeout=600)
+    finally:
+        if proc.poll() is None:
+            proc.kill()
+    assert proc.returncode == 0, log.read_text(errors="replace")[-3000:]
+    time.sleep(5)
+    assert _session_members(proc.pid) == []

@@ -11,10 +11,19 @@ import defuddle_spark without a cluster-wide install):
         --output /tmp/defuddle_out --manifest /tmp/defuddle_manifest \
         --buckets 64 --group-size 16
 
+The shipped zip costs no per-task rescan: PySpark invalidates the import
+caches at every task start, which re-reads each cached zipimporter's
+archive directory, and every Python stage function drops those importers
+first (``spark.session.drop_zip_importers``), the --py-files zip's
+included.
+
 On a real cluster --input points at the Iceberg/parquet pages table of
 shape (url, warc_ts, html, text, lang); --synthesize is the sandbox path
 that derives pages from the documents table. Re-running with the same
---output/--manifest resumes: committed buckets are anti-joined away.
+--output/--manifest resumes: buckets with a manifest record are skipped,
+and the rest are redone, each group overwriting its own bucket
+directories (so rows a crashed attempt left behind are replaced, not
+duplicated).
 
 Mirrors the reference CLI surface (cmd/defuddle/main.go:38-120) at job
 granularity: input selection, output destination, option flags.
