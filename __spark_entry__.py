@@ -812,8 +812,9 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-CLUSTER collapse (the step after pair generation):
     exact-duplicate triples (docs ∪ +10000 ∪ +20000 copies) produce
     3-cliques via threshold-1.0 n-gram Jaccard (equal shingle sets —
-    fully deterministic), and label-propagation connected components
-    must assign every member its clique minimum. The oracle recomputes
+    fully deterministic), and duplicate_components' connected-components
+    loop (FastSV hooking; 2 rounds on cliques, O(log n) on chains) must
+    assign every member its clique minimum. The oracle recomputes
     components with a recursive transitive closure in DuckDB."""
     from defuddle_spark.ops.dedup import (duplicate_components,
                                           ngram_jaccard_pairs)

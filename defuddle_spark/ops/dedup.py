@@ -315,8 +315,11 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
             # of sig, so the hash+sort projection runs once; a
             # broadcast join evaluates it once per side (measured on
             # dedup_clusters at sf0.1, 4 cores: 5.0 s vs 3.2 s, min of 3).
+            # A duplicated id meets its partners once per row, so pairs
+            # are deduplicated, as minhash_lsh_candidates' are.
             return (_same_key_pairs(sig.hint("merge"), ["_k1", "_k2"],
                                     id_col)
+                    .dropDuplicates(["id_a", "id_b"])
                     .withColumn("jaccard", F.lit(1.0)))
         # a >=10^6-distinct-shingle doc exists: the 1/|union| bound no
         # longer separates equal from near-equal sets — general path
@@ -493,7 +496,6 @@ def duplicate_components(pairs: DataFrame, id_a: str = "id_a",
                          id_b: str = "id_b",
                          max_iters: int = 50,
                          strict: bool = False,
-                         algorithm: str = "auto",
                          stats: Optional[dict] = None) -> DataFrame:
     """Collapse candidate near-dup pairs into duplicate CLUSTERS:
     (doc_id, component) where component is the cluster's minimum id.
@@ -504,262 +506,124 @@ def duplicate_components(pairs: DataFrame, id_a: str = "id_a",
     per pair (pairwise keep-min would keep b from (b,c) even though b
     loses to a).
 
-    Three algorithms, identical output (differential-tested):
+    One loop: FastSV (Zhang, Azad & Hu, "FastSV: A Distributed-Memory
+    Connected Component Algorithm with Fast Convergence", SIAM PP 2020),
+    a Shiloach–Vishkin variant. Every node keeps a parent pointer
+    ``p <= node``; round 1 (identity parents) sets
+    ``p = least(node, min neighbor)``, and each later round, with
+    grandparents ``gp = p[p]``, sets
 
-    - ``algorithm="label"``: min-label propagation — every node adopts
-      the minimum label in its neighborhood each round; one join + one
-      groupBy per round, but O(diameter) rounds. The cheapest choice on
-      blob-shaped clusters (a boilerplate cluster is one dense blob,
-      diameter 2-3): measured ~3x less per-round work than star.
-    - ``algorithm="star"``: alternating large-star/small-star
-      contraction (Kiveris et al., "Connected Components in MapReduce
-      and Beyond") — each round rewires every node toward its
-      neighborhood minimum, which SQUARES the contraction rate:
-      O(log n) rounds regardless of graph diameter. At 10^12-doc scale
-      this is the difference between ~60 rounds and ~7 on chained
-      near-dup clusters (template drift chains A~B~C~… where
-      consecutive crawl snapshots each pair only with their
-      neighbors). Measured (BENCH/components_star_r7.json, 128k-node
-      planted chains of 64): star 7 rounds/23.8s vs label 64
-      rounds/67.8s; on dense blobs label wins (8.0s vs 12.5s).
-    - ``algorithm="auto"`` (default): up to ``_AUTO_LABEL_ROUNDS``
-      quiet label rounds — blob-shaped graphs converge there and pay
-      nothing extra — then, if unconverged, the full star contraction.
-      Worst case adds ~2-3 star-rounds' worth of label work before
-      switching; in exchange no input shape can drag the loop to
-      O(diameter), which is the property that matters when the
-      diameter is unknowable upfront (it always is at crawl scale).
+        p[x] = least(p[x], gp[x], m[x], s[x]),
+        m[u] = min gp[v] over u's neighbors v   (aggressive hooking),
+        s[x] = min m[u] over u with p[u] = x    (stochastic hooking),
 
-    Both loops stop when a round changes NOTHING and eagerly
-    localCheckpoint every round's frame: an iterative DataFrame loop
-    otherwise stacks each round's plan on top of the last and Catalyst
-    re-analysis blows up superlinearly (measured: a 12-round chain took
-    minutes un-truncated, seconds truncated — the same reason
-    GraphFrames checkpoints its CC iterations). On a real cluster
-    prefer spark.sparkContext.setCheckpointDir + .checkpoint() for
+    where taking gp is the shortcut. It converges in O(log n) rounds on
+    chains (template drift A~B~C~… where consecutive crawl snapshots each
+    pair only with their neighbors, whose diameter is unknowable up
+    front) and in 2 rounds on dense blobs (a boilerplate cluster), so no
+    shape needs a different algorithm. It replaced min-label propagation
+    (O(diameter) rounds), large/small-star contraction (O(log n) rounds
+    at ~3x a label round's work) and the switch between them; each of
+    those won one shape (BENCH/components_star_r7.json), this loop wins
+    or ties both (BENCH/components_one_loop_4c.json).
+
+    The loop stops when a round changes no parent. At that fixed point
+    ``p == gp`` (every tree has depth 1) and ``p[u] <= p[v]`` on every
+    edge, both ways, so each component has one root; a parent always
+    lies in its node's component and ``p <= node``, so the root is the
+    component minimum.
+
+    Each round's only edge-volume work is the ``m`` join + aggregate;
+    the rest is node-volume. The parent frame is eagerly
+    localCheckpointed every round, with the changed flag riding the
+    checkpoint: an iterative DataFrame loop otherwise stacks each
+    round's plan on top of the last and Catalyst re-analysis blows up
+    superlinearly (measured: a 12-round chain took minutes un-truncated,
+    seconds truncated — the same reason GraphFrames checkpoints its CC
+    iterations). On a real cluster prefer
+    spark.sparkContext.setCheckpointDir + .checkpoint() for
     executor-loss tolerance; localCheckpoint trades that for speed,
     which is the right call inside a single job.
 
-    At 10^12-doc scale the pair set is the output of the banded/blocked
-    candidate generators (never all-pairs), and rounds shuffle one row
-    per node/edge — the same shape GraphX/GraphFrames connected
-    components uses, without the library dependency.
-
     ``stats`` (optional dict) receives ``rounds`` (iterations the
-    driver loop ran — under auto, both phases summed), ``converged``
-    and ``algorithm`` (``auto:label`` / ``auto:star`` records which
-    phase produced the result) — the round-count evidence behind the
-    algorithm choice (frozen in BENCH/components_star_r7.json).
+    driver loop ran) and ``converged``.
     """
-    if algorithm == "star":
-        return _components_star(pairs, id_a, id_b, max_iters, strict,
-                                stats)
-    if algorithm == "auto":
-        probe = {}
-        out = _components_label(pairs, id_a, id_b,
-                                min(_AUTO_LABEL_ROUNDS, max_iters),
-                                strict=False, stats=probe, warn=False)
-        if probe["converged"]:
-            if stats is not None:
-                stats.update(probe, algorithm="auto:label")
-            return out
-        star_stats = {}
-        out = _components_star(pairs, id_a, id_b, max_iters, strict,
-                               star_stats)
-        if stats is not None:
-            stats.update(rounds=probe["rounds"] + star_stats["rounds"],
-                         converged=star_stats["converged"],
-                         algorithm="auto:star")
-        return out
-    if algorithm != "label":
-        raise ValueError(f"unknown algorithm {algorithm!r}; "
-                         "pick 'auto', 'star' or 'label'")
-    return _components_label(pairs, id_a, id_b, max_iters, strict, stats)
-
-
-# Auto-mode label budget: blob-shaped near-dup clusters converge in 2-3
-# label rounds; 6 covers moderately chained shapes while costing at most
-# ~2 star-rounds of work (a label round measures ~3x cheaper) before the
-# O(log n) path takes over.
-_AUTO_LABEL_ROUNDS = 6
-
-
-def _components_label(pairs: DataFrame, id_a: str, id_b: str,
-                      max_iters: int, strict: bool,
-                      stats: Optional[dict] = None,
-                      warn: bool = True) -> DataFrame:
-    """Min-label propagation (see duplicate_components). ``warn=False``
-    silences the non-convergence warning — the auto path treats that
-    outcome as "switch to star", not as a user-facing problem."""
-    # symmetric edge list (a~b and b~a), one row per direction
+    if max_iters < 1:
+        raise ValueError(f"max_iters must be >= 1, got {max_iters}")
+    # symmetric edge list (a~b and b~a), one row per direction; every
+    # node, self-paired ones included, is a src
     edges = (pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
              .unionByName(
                  pairs.select(F.col(id_b).alias("src"),
                               F.col(id_a).alias("dst")))
              .distinct()
              .localCheckpoint(eager=True))
-    # lazy on purpose: the identity labels are consumed exactly once (the
-    # round-1 join; round 1's neigh no longer reads labels at all), so
-    # the distinct folds into round 1's job instead of paying its own
-    # eager checkpoint barrier; every later round's labels frame IS a
-    # checkpoint (nxt), so plan growth stays truncated
-    labels = (edges.select(F.col("src").alias("node"))
-              .distinct()
-              .withColumn("label", F.col("node")))
     changed = 0
     rounds = 0
-    for it in range(max_iters):
+    parents = None
+    for _ in range(max_iters):
         rounds += 1
-        # each node's next label: min over self-label and neighbors'.
-        # Round 1 specializes: labels are still the identity, so the
-        # neighborhood-label min IS min(dst) — one groupBy, no join
-        # (round-8 fixed-cost trim; identical result by construction).
-        if it == 0:
-            neigh = (edges.groupBy("src")
-                     .agg(F.min("dst").alias("nmin"))
-                     .withColumnRenamed("src", "node"))
+        if parents is None:
+            # round 1: parents are the identity, so gp = node and s = m
+            # = min neighbor — one aggregate, no join
+            step = (edges.groupBy("src").agg(F.min("dst").alias("m"))
+                    .select(F.col("src").alias("node"),
+                            F.least("src", "m").alias("p"),
+                            F.col("src").alias("old")))
         else:
-            neigh = (edges
-                     .join(labels.withColumnRenamed("node", "dst")
-                           .withColumnRenamed("label", "nlabel"), "dst")
-                     .groupBy("src").agg(F.min("nlabel").alias("nmin"))
-                     .withColumnRenamed("src", "node"))
-        new_label = F.least("label", F.coalesce("nmin", "label"))
+            gp = parents.join(
+                parents.select(F.col("node").alias("p"),
+                               F.col("p").alias("gp")), "p")
+            m = (edges
+                 .join(gp.select(F.col("node").alias("dst"),
+                                 F.col("gp").alias("ngp")), "dst")
+                 .groupBy("src").agg(F.min("ngp").alias("m"))
+                 .withColumnRenamed("src", "node"))
+            # each node u offers least(gp, m) to itself and m to its
+            # parent (the s term), and one min over the offers is the new
+            # parent (gp <= p makes p itself redundant). Both offers carry
+            # the target's current parent (p[u], and gp[u] = p[p[u]]) for
+            # the changed flag; they ride one exploded array so the gp/m
+            # plan runs once.
+            offers = gp.join(m, "node").select(F.explode(F.array(
+                F.struct(F.col("node"), F.least("gp", "m").alias("q"),
+                         F.col("p").alias("old")),
+                F.struct(F.col("p").alias("node"), F.col("m").alias("q"),
+                         F.col("gp").alias("old")))).alias("o"))
+            step = (offers.groupBy("o.node")
+                    .agg(F.min("o.q").alias("p"), F.max("o.old").alias("old")))
         # the changed flag rides the SAME checkpointed frame, so
         # convergence detection is a narrow filter over the checkpoint
-        # instead of a second shuffle join per round (round 8)
-        nxt = (labels.join(neigh, "node", "left")
-               .select("node", new_label.alias("label"),
-                       (new_label != F.col("label")).alias("_chg"))
+        nxt = (step.select("node", "p",
+                           (F.col("p") != F.col("old")).alias("_chg"))
                .localCheckpoint(eager=True))
         changed = nxt.filter("_chg").limit(1).count()
         # Release the previous round: Dataset.unpersist() is a NO-OP for
         # localCheckpointed frames (the RDD is persisted at the RDD
         # level, not via the CacheManager), so the actual reclamation
-        # path is reference-dropping — rebinding `labels` releases the
+        # path is reference-dropping — rebinding `parents` releases the
         # only handle, the py4j wrapper is collected, and the JVM
         # ContextCleaner unpersists the orphaned checkpoint RDD. Storage
         # is therefore bounded by GC latency, not O(rounds).
-        labels = nxt.drop("_chg")
+        parents = nxt.drop("_chg")
         if changed == 0:
             break
     if stats is not None:
-        stats.update(rounds=rounds, converged=changed == 0,
-                     algorithm="label")
-    if changed != 0 and warn:
+        stats.update(rounds=rounds, converged=changed == 0)
+    if changed != 0:
         # no-silent-caps convention (same as hot_bucket_cap's warning):
-        # an unconverged result keeps intermediate labels and would make
+        # an unconverged result keeps intermediate parents and would make
         # dedup_survivors retain duplicate members of one component
-        msg = ("duplicate_components: label propagation did NOT converge "
-               f"within max_iters={max_iters} (a component's graph diameter "
-               "exceeds it); results contain unmerged labels — raise "
-               "max_iters")
+        msg = ("duplicate_components: did NOT converge within "
+               f"max_iters={max_iters}; results contain unmerged "
+               "components — raise max_iters")
         if strict:
             raise RuntimeError(msg)
         log.warning(msg)
     # edges' checkpoint is likewise reclaimed by the ContextCleaner when
     # this frame goes out of scope (unpersist() would be a no-op)
-    return labels.select(F.col("node").alias("doc_id"),
-                         F.col("label").alias("component"))
-
-
-def _components_star(pairs: DataFrame, id_a: str, id_b: str,
-                     max_iters: int, strict: bool,
-                     stats: Optional[dict] = None) -> DataFrame:
-    """Alternating large-star / small-star contraction (Kiveris et al.):
-    edges converge to stars rooted at each component's minimum id in
-    O(log n) rounds. Edges are kept CANONICAL — one row per undirected
-    edge as (u, v) with u > v — which both halves preserve:
-
-    - large-star: for every node x, every strictly-larger neighbor is
-      rewired to m = min(neighborhood(x) ∪ {x}); needs both directions,
-      so it symmetrizes the canonical set on the fly. Output (bigger,
-      m) with bigger > x >= m — canonical by construction.
-    - small-star: every edge routed to its LARGER endpoint u (that is
-      exactly the canonical u column); u and all its routed (smaller)
-      neighbors rewire to m = min of those neighbors. Output again
-      (node, m) with node > m.
-
-    Convergence = the canonical edge set is stable under a round (same
-    count and nothing new — set semantics hold because both halves end
-    in distinct()). On a converged star, labels are simply the edges
-    themselves (non-root -> root); nodes with no surviving edge (roots,
-    self-paired inputs) label themselves.
-    """
-    sym_in = (pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-              .unionByName(pairs.select(F.col(id_b).alias("u"),
-                                        F.col(id_a).alias("v"))))
-    # every node that appears in pairs gets an output row, exactly like
-    # the label algorithm (including nodes only ever self-paired, which
-    # the canonical self-loop filter would otherwise drop)
-    nodes = (sym_in.select(F.col("u").alias("node")).distinct()
-             .localCheckpoint(eager=True))
-    edges = (sym_in.filter(F.col("u") > F.col("v")).distinct()
-             .localCheckpoint(eager=True))
-    n_edges = edges.count()
-    converged = False
-    rounds = 0
-    for _ in range(max_iters):
-        rounds += 1
-        # large-star: x's larger neighbors hook to x's neighborhood min
-        sym = edges.unionByName(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        lmin = sym.groupBy("u").agg(F.min("v").alias("mn"))
-        large = (sym.join(lmin, "u")
-                 .filter(F.col("v") > F.col("u"))
-                 .select(F.col("v").alias("nu"),
-                         F.least("mn", "u").alias("nv"))
-                 .select(F.col("nu").alias("u"), F.col("nv").alias("v"))
-                 .distinct()
-                 .localCheckpoint(eager=True))
-        # small-star: u and its smaller neighbors hook to their min
-        smin = large.groupBy("u").agg(F.min("v").alias("mn"))
-        small = (large.join(smin, "u")
-                 .select(F.col("v").alias("nu"), F.col("mn").alias("nv"))
-                 .unionByName(smin.select(F.col("u").alias("nu"),
-                                          F.col("mn").alias("nv")))
-                 .filter(F.col("nu") != F.col("nv"))
-                 .select(F.col("nu").alias("u"), F.col("nv").alias("v"))
-                 .distinct()
-                 .localCheckpoint(eager=True))
-        n_new = small.count()
-        if (n_new == n_edges
-                and small.exceptAll(edges).limit(1).count() == 0):
-            # Equal counts + nothing new => identical sets (both sides
-            # are distinct()), so the round was a fixed point. Accept it
-            # only if it is actually a disjoint star set (every non-root
-            # points at exactly one root, no node on both sides) — stars
-            # are provably stable and reached in O(log n) rounds; this
-            # guards against declaring victory on any other fixed point.
-            is_star = (small.groupBy("u").agg(
-                F.count_distinct("v").alias("c"))
-                .filter(F.col("c") > 1).limit(1).count() == 0
-                and small.select("u").intersect(
-                    small.select(F.col("v").alias("u")))
-                .limit(1).count() == 0)
-            if is_star:
-                edges = small
-                converged = True
-                break
-        edges, n_edges = small, n_new
-    if stats is not None:
-        stats.update(rounds=rounds, converged=converged,
-                     algorithm="star")
-    if not converged:
-        msg = ("duplicate_components(star): contraction did NOT converge "
-               f"within max_iters={max_iters}; results contain unmerged "
-               "labels — raise max_iters")
-        if strict:
-            raise RuntimeError(msg)
-        log.warning(msg)
-    # converged edges ARE the labels: (non-root u -> root v); the
-    # groupBy-min is belt-and-braces for the unconverged-warning path,
-    # where a node may still carry two candidate roots
-    labels = edges.groupBy("u").agg(F.min("v").alias("component"))
-    return (nodes.join(labels.withColumnRenamed("u", "node"),
-                       "node", "left")
-            .select(F.col("node").alias("doc_id"),
-                    F.coalesce("component", "node").alias("component")))
+    return parents.select(F.col("node").alias("doc_id"),
+                          F.col("p").alias("component"))
 
 
 def dedup_survivors(docs: DataFrame, pairs: DataFrame,
@@ -774,10 +638,10 @@ def dedup_survivors(docs: DataFrame, pairs: DataFrame,
     component minimum and never-candidated docs survive.
 
     ``id_a``/``id_b`` name the pair frame's columns (passed through to
-    duplicate_components); ``max_iters`` bounds label propagation, and
-    ``strict=True`` raises instead of warning when propagation fails to
-    converge (an unconverged result silently retains duplicate members
-    of unmerged components — a correctness hazard callers may prefer to
+    duplicate_components); ``max_iters`` bounds its rounds, and
+    ``strict=True`` raises instead of warning when they do not converge
+    (an unconverged result silently retains duplicate members of
+    unmerged components — a correctness hazard callers may prefer to
     fail on).
     """
     comp = duplicate_components(pairs, id_a=id_a, id_b=id_b,

@@ -285,6 +285,7 @@ class _Stream:
                     got = self._z.decompress(rest, self._CHUNK)
                     self._member_out += len(got)
                     self._buf += got
+                    self._check_input_end()
                 elif self._pos >= len(self._raw):
                     break
                 continue
@@ -294,18 +295,36 @@ class _Stream:
                 got = z.decompress(z.unconsumed_tail, self._CHUNK)
                 self._member_out += len(got)
                 self._buf += got
+                self._check_input_end()
                 continue
             if self._pos >= len(self._raw):
-                tail = z.flush()
-                if tail:
-                    self._member_out += len(tail)
-                    self._buf += tail
                 break
             chunk = bytes(self._raw[self._pos:self._pos + self._CHUNK])
             self._pos += len(chunk)
             got = z.decompress(chunk, self._CHUNK)
             self._member_out += len(got)
             self._buf += got
+            self._check_input_end()
+
+    def _check_input_end(self) -> None:
+        """Once the member's last compressed byte has been fed, flush
+        what inflate still holds and check the member reached its end
+        marker and CRC. A member that runs out of input first is
+        truncated or garbled — a flipped byte can turn the final block
+        into one that never terminates, so no zlib.error ever fires —
+        and it is counted as a corruption event HERE, before any of its
+        records is handed out, so digest verification (``"auto"``)
+        covers them. Nothing follows it: the stream ends after the
+        buffered bytes."""
+        z = self._z
+        if self._pos < len(self._raw) or z.eof or z.unconsumed_tail:
+            return
+        tail = z.flush()
+        self._member_out += len(tail)
+        self._buf += tail
+        if not z.eof:
+            self.resyncs += 1
+            self._dead = True
 
     def readline(self, limit: int = 1 << 16) -> bytes:
         probe = 256
@@ -490,6 +509,76 @@ def _digest_ok(header: str, payload: bytes) -> Optional[bool]:
             or want.lower() == h.hexdigest())
 
 
+def _verified_records(stream: _Stream, verify_digests,
+                      counts: dict) -> Iterator[dict]:
+    """Frame records off ``stream`` and drop those failing digest
+    verification (counted in ``counts["digest_failures"]``); see
+    iter_warc_records for the policy."""
+    while True:
+        headers = _parse_headers(stream)
+        if headers is None:
+            if stream.consume_resync():
+                continue  # corrupt member skipped; next one follows
+            return
+        if not any(v.startswith("WARC/") for v in
+                   headers.get("_start_line", [])):
+            if stream.consume_resync():
+                continue
+            return  # lost framing: stop rather than misattribute bytes
+        try:
+            length = int(headers.get("content-length", ""))
+        except ValueError:
+            if stream.consume_resync():
+                continue
+            return
+        if length < 0:
+            # malformed framing: same recovery as the sibling
+            # branches — try the resync boundary before giving up,
+            # so one garbled member can't drop the rest of the
+            # archive
+            if stream.consume_resync():
+                continue
+            return
+        payload = stream.read(length)
+        if len(payload) < length:
+            if stream.consume_resync():
+                continue  # partial record dropped at the boundary
+            return  # truncated tail record
+        dig = headers.get("warc-block-digest")
+        if dig and (verify_digests is True
+                    or (verify_digests == "auto"
+                        and stream.resyncs > 0)):
+            ok = _digest_ok(dig, payload)
+            # On a stream that HIT corruption, an unparseable digest
+            # (ok is None — e.g. the value separator itself got
+            # garbled) counts as failed: "can't verify" on a suspect
+            # stream is not "verified". On a clean stream under
+            # verify_digests=True, an unknown algorithm passes
+            # through (legit archives may use digests hashlib lacks).
+            if ok is False or (ok is None and stream.resyncs > 0):
+                counts["digest_failures"] += 1
+                continue
+        headers["payload"] = payload
+        yield headers
+
+
+def _ambiguous_ids(raw: bytes, verify_digests) -> set:
+    """Record ids that frame in ``raw`` with two different
+    WARC-Block-Digest values: two different blocks claim the id, and
+    nothing tells which one is the record's own."""
+    digests: dict = {}
+    ambiguous: set = set()
+    for rec in _verified_records(_Stream(raw, archive=True),
+                                 verify_digests, {"digest_failures": 0}):
+        rid = rec.get("warc-record-id")
+        dig = rec.get("warc-block-digest")
+        if rid is None or not dig:
+            continue
+        if digests.setdefault(rid, dig) != dig:
+            ambiguous.add(rid)
+    return ambiguous
+
+
 def iter_warc_records(raw: bytes, stats: Optional[dict] = None,
                       verify_digests="auto") -> Iterator[dict]:
     """Yield per-record dicts from one WARC file's raw bytes (plain or
@@ -516,7 +605,13 @@ def iter_warc_records(raw: bytes, stats: Optional[dict] = None,
     does. A digest can't catch byte-PERFECT duplicates (a corrupt
     LZ77 back-reference can make deflate re-emit whole earlier
     records), so once a stream has hit corruption, records whose
-    WARC-Record-ID was already yielded are suppressed too.
+    WARC-Record-ID was already yielded are suppressed too. Keeping the
+    first copy is wrong in one case: a garbled header can give an
+    intact block ANOTHER record's id (the digest binds the block, not
+    the headers), and the garbled copy can come first. So an id whose
+    copies carry different block digests is ambiguous and every copy
+    of it is dropped; a second pass over ``raw`` finds those ids, paid
+    only by files that hit corruption.
 
     Detection-window caveat: "auto" protects records yielded AFTER the
     corruption is detected. For member-per-record archives (the Common
@@ -532,70 +627,30 @@ def iter_warc_records(raw: bytes, stats: Optional[dict] = None,
     events), ``digest_failures`` (records dropped by verification) and
     ``duplicate_drops``, so callers can surface the loss per file."""
     stream = _Stream(raw, archive=True)
-    digest_failures = 0
+    counts = {"digest_failures": 0}
     duplicate_drops = 0
+    # ids are tracked from the first record (a set add per record) so a
+    # post-corruption duplicate of a record yielded BEFORE detection is
+    # still caught; suppression itself only engages once the stream is
+    # known corrupt.
     seen_ids: set = set()
+    ambiguous = None
     try:
-        while True:
-            headers = _parse_headers(stream)
-            if headers is None:
-                if stream.consume_resync():
-                    continue  # corrupt member skipped; next one follows
-                return
-            if not any(v.startswith("WARC/") for v in
-                       headers.get("_start_line", [])):
-                if stream.consume_resync():
-                    continue
-                return  # lost framing: stop rather than misattribute bytes
-            try:
-                length = int(headers.get("content-length", ""))
-            except ValueError:
-                if stream.consume_resync():
-                    continue
-                return
-            if length < 0:
-                # malformed framing: same recovery as the sibling
-                # branches — try the resync boundary before giving up,
-                # so one garbled member can't drop the rest of the
-                # archive (ADVICE r7)
-                if stream.consume_resync():
-                    continue
-                return
-            payload = stream.read(length)
-            if len(payload) < length:
-                if stream.consume_resync():
-                    continue  # partial record dropped at the boundary
-                return  # truncated tail record
-            dig = headers.get("warc-block-digest")
-            if dig and (verify_digests is True
-                        or (verify_digests == "auto"
-                            and stream.resyncs > 0)):
-                ok = _digest_ok(dig, payload)
-                # On a stream that HIT corruption, an unparseable digest
-                # (ok is None — e.g. the value separator itself got
-                # garbled) counts as failed: "can't verify" on a suspect
-                # stream is not "verified". On a clean stream under
-                # verify_digests=True, an unknown algorithm passes
-                # through (legit archives may use digests hashlib lacks).
-                if ok is False or (ok is None and stream.resyncs > 0):
-                    digest_failures += 1
-                    continue
-            # ids are tracked from the first record (a set add per
-            # record) so a post-corruption duplicate of a record yielded
-            # BEFORE detection is still caught; suppression itself only
-            # engages once the stream is known corrupt.
-            rid = headers.get("warc-record-id")
-            if rid is not None:
-                if rid in seen_ids and stream.resyncs > 0:
+        for rec in _verified_records(stream, verify_digests, counts):
+            rid = rec.get("warc-record-id")
+            if rid is not None and stream.resyncs > 0:
+                if ambiguous is None:
+                    ambiguous = _ambiguous_ids(raw, verify_digests)
+                if rid in seen_ids or rid in ambiguous:
                     duplicate_drops += 1
                     continue
+            if rid is not None:
                 seen_ids.add(rid)
-            headers["payload"] = payload
-            yield headers
+            yield rec
     finally:
         if stats is not None:
             stats["resyncs"] = stream.resyncs
-            stats["digest_failures"] = digest_failures
+            stats["digest_failures"] = counts["digest_failures"]
             stats["duplicate_drops"] = duplicate_drops
 
 

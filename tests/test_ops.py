@@ -592,7 +592,7 @@ def test_dedup_cache_handles_are_independent(toy_docs):
 
 
 def test_duplicate_components_and_survivors(spark):
-    """Label propagation collapses transitive near-dup chains: pairwise
+    """Connected components collapse transitive near-dup chains: pairwise
     keep-min would keep 2 from (2,3) even though 2 loses to 1."""
     from defuddle_spark.ops.dedup import dedup_survivors, duplicate_components
 
@@ -642,7 +642,7 @@ def test_ngram_jaccard_pairs_refuses_over_bound(spark):
 
 
 def test_duplicate_components_long_chain_converges(spark):
-    # a 12-node path graph needs multiple propagation rounds
+    # a 12-node path graph needs several rounds
     from defuddle_spark.ops.dedup import duplicate_components
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(100, 112)], ["id_a", "id_b"])
@@ -651,68 +651,87 @@ def test_duplicate_components_long_chain_converges(spark):
     assert comp == {(i, 100) for i in range(100, 113)}
 
 
-def test_duplicate_components_star_matches_label(spark):
-    """The two algorithms are interchangeable: star contraction
-    (default, O(log n) rounds) and label propagation (O(diameter))
-    produce identical (doc_id, component) sets on every graph shape —
-    chains, blobs, reversed pairs, self-pairs, disjoint components."""
+def _union_find_components(pairs):
+    """Reference (doc_id, component minimum) set by union-find."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {(x, find(x)) for x in list(parent)}
+
+
+def test_duplicate_components_matches_union_find(spark):
+    """One call over one pairs frame whose disjoint id ranges hold every
+    shape: sorted, reversed and shuffled-id chains, random trees, random
+    graphs, a clique, self-pairs and mixed small components. The
+    output must equal a Python union-find's component minimum per node.
+
+    One call, not one per shape: each call runs a few eager jobs per
+    round, so ~10 calls cost ~10x the jobs for the same coverage."""
+    import random
+
     from defuddle_spark.ops.dedup import duplicate_components
 
-    cases = {
-        "blob": [(a, b) for a in range(5) for b in range(a + 1, 5)],
-        "mixed": [(1, 2), (2, 3), (10, 11), (20, 20), (30, 31),
-                  (31, 32), (32, 30), (5, 4)],
-        "reversed_chain": [(i + 1, i) for i in range(40, 52)],
-        "two_chains": ([(i, i + 2) for i in range(100, 120, 2)]
-                       + [(200, 201)]),
-    }
-    for name, ps in cases.items():
-        pairs = spark.createDataFrame(ps, ["id_a", "id_b"])
-        star = sorted(map(tuple, duplicate_components(
-            pairs, algorithm="star").collect()))
-        label = sorted(map(tuple, duplicate_components(
-            pairs, algorithm="label").collect()))
-        assert star == label, name
-
-    # the auto default resolves to label on a quick-converging blob and
-    # to star on a chain deeper than its label budget — same output
-    blob = spark.createDataFrame(cases["blob"], ["id_a", "id_b"])
+    rng = random.Random(12)
+    ps = [(i, i + 1) for i in range(1000, 1060)]          # sorted chain
+    ps += [(i + 1, i) for i in range(2000, 2040)]         # reversed chain
+    ids = list(range(3000, 3064))
+    rng.shuffle(ids)
+    ps += list(zip(ids, ids[1:]))                         # shuffled chain
+    for base in (4000, 4500):                             # random trees
+        ps += [(base + rng.randrange(i), base + i) for i in range(1, 120)]
+    for base in (5000, 5500):                             # random graphs
+        ps += [(base + rng.randrange(150), base + rng.randrange(150))
+               for _ in range(120)]
+    ps += [(6000 + a, 6000 + b)                           # a clique
+           for a in range(8) for b in range(a + 1, 8)]
+    ps += [(7000, 7000), (7001, 7001), (7002, 7003), (7003, 7003)]
+    ps += [(1, 2), (2, 3), (10, 11), (20, 20), (30, 31),  # mixed
+           (31, 32), (32, 30), (5, 4)]
+    rng.shuffle(ps)
     st: dict = {}
-    out = sorted(map(tuple, duplicate_components(blob, stats=st).collect()))
-    assert st["algorithm"] == "auto:label" and st["converged"]
-    assert out == sorted(map(tuple, duplicate_components(
-        blob, algorithm="label").collect()))
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(300, 320)], ["id_a", "id_b"])
-    st = {}
-    out = {(r["doc_id"], r["component"])
-           for r in duplicate_components(chain, stats=st).collect()}
-    assert st["algorithm"] == "auto:star" and st["converged"]
-    assert out == {(i, 300) for i in range(300, 321)}
-
-    with pytest.raises(ValueError, match="star.*label"):
-        duplicate_components(
-            spark.createDataFrame([(1, 2)], ["id_a", "id_b"]),
-            algorithm="bogus")
+    out = set(map(tuple, duplicate_components(
+        spark.createDataFrame(ps, "id_a long, id_b long"),
+        stats=st).collect()))
+    assert st["converged"]
+    assert out == _union_find_components(ps)
 
 
-def test_duplicate_components_star_logn_rounds(spark):
-    """The scale claim behind the star default: a 60-node path graph
-    (diameter 60) converges within 8 star rounds — label propagation
-    provably cannot (it moves the min one hop per round) and raises
-    under the same budget with strict=True."""
+def test_duplicate_components_logn_rounds(spark):
+    """A 60-edge path (diameter 60) converges within 8 rounds with
+    sorted ids and with shuffled ids; min-label propagation, which moves
+    the minimum one hop per round, needed 61. The loop is deterministic
+    for a given input, so these budgets are properties of these two
+    inputs: a Python model of the loop takes 7 rounds on both, and 6-9
+    over 2000 random shuffles of this path (9 in ~2%). strict=True still
+    raises when the budget is too small, and a budget below one round is
+    refused."""
+    import random
+
     from defuddle_spark.ops.dedup import duplicate_components
 
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(200, 260)], ["id_a", "id_b"])
-    comp = {(r["doc_id"], r["component"])
-            for r in duplicate_components(
-                pairs, algorithm="star", max_iters=8,
-                strict=True).collect()}
-    assert comp == {(i, 200) for i in range(200, 261)}
+    ids = list(range(200, 261))
+    shuffled = ids[:]
+    random.Random(0).shuffle(shuffled)
+    for order in (ids, shuffled):
+        pairs = spark.createDataFrame(list(zip(order, order[1:])),
+                                      ["id_a", "id_b"])
+        comp = {(r["doc_id"], r["component"])
+                for r in duplicate_components(
+                    pairs, max_iters=8, strict=True).collect()}
+        assert comp == {(i, 200) for i in ids}
     with pytest.raises(RuntimeError, match="did NOT converge"):
-        duplicate_components(pairs, algorithm="label", max_iters=8,
-                             strict=True).collect()
+        duplicate_components(pairs, max_iters=2, strict=True).collect()
+    with pytest.raises(ValueError, match="max_iters"):
+        duplicate_components(pairs, max_iters=0)
 
 
 def test_cosine_topk_batch_matches_single_query(spark):
@@ -1058,6 +1077,18 @@ def test_ngram_jaccard_duplicate_id_one_row_per_pair(spark):
            .collect()]
     # n_common = 3, n_1 = 3 + 1, n_2 = 3 -> 3 / (4 + 3 - 3)
     assert out == [(1, 2, 0.75)]
+
+
+def test_ngram_jaccard_threshold1_duplicate_rows_one_pair(spark):
+    """The threshold-1.0 path pairs rows of one equal-set group, so an id
+    carried by two rows met its partner once per row: (1, 2) came back
+    twice. Each pair comes back once, as on the general path."""
+    from defuddle_spark.ops.dedup import ngram_jaccard_pairs
+    rows = [(1, "x y z"), (1, "x y z"), (2, "x y z"), (3, "p q r")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    out = [tuple(r) for r in ngram_jaccard_pairs(df, threshold=1.0)
+           .collect()]
+    assert out == [(1, 2, 1.0)]
 
 
 def test_pii_ipv4_sentence_final(spark):

@@ -121,6 +121,69 @@ def test_resume_after_crash_between_write_and_record(spark, tmp_path,
     pages.unpersist()
 
 
+def test_resume_after_crash_inside_a_task(spark, tmp_path, monkeypatch):
+    """A Python task that raises while group 2 is being written fails
+    that group's write job after the other tasks have written their
+    files. The job leaves no row of group 2 and no commit record; the
+    resume redoes it: every url once, the manifest's doc_count equal to
+    the input count, and the same rows a crash-free run writes."""
+    from defuddle_spark.spark import manifest
+    from defuddle_spark.spark.pages import synthesize_pages
+
+    pages = synthesize_pages(spark, SF).select("url", "html").cache()
+    n_total = pages.count()
+    out_dir, man_dir = str(tmp_path / "out"), str(tmp_path / "manifest")
+    # group 2 holds buckets 2 and 3 (8 buckets in groups of 2)
+    target = (manifest.with_bucket(pages, 8)
+              .filter(F.col("bucket").isin(2, 3)).agg(F.min("url"))
+              .head()[0])
+
+    extract = manifest.extract_pages
+    calls = []
+
+    def crash_in_second_group(df, **kw):
+        out = extract(df, **kw)
+        calls.append(1)
+        if len(calls) != 2:
+            return out
+
+        def fail_on_target(batches):
+            for b in batches:
+                if (b["url"] == target).any():
+                    raise RuntimeError("injected crash inside a task")
+                yield b
+        return out.mapInPandas(fail_on_target, out.schema)
+
+    monkeypatch.setattr(manifest, "extract_pages", crash_in_second_group)
+    with pytest.raises(Exception, match="injected crash inside a task"):
+        manifest.run_extraction_job(spark, pages, out_dir, man_dir,
+                                    num_buckets=8, group_size=2)
+    monkeypatch.setattr(manifest, "extract_pages", extract)
+    assert len(calls) == 2
+    assert manifest.committed_buckets(spark, man_dir) == {0, 1}
+    written = spark.read.parquet(out_dir).select("bucket").distinct()
+    assert {r["bucket"] for r in written.collect()} == {0, 1}
+
+    m = manifest.run_extraction_job(spark, pages, out_dir, man_dir,
+                                    num_buckets=8, group_size=2)
+    assert m["buckets_done_before"] == 2 and m["groups_run"] == 3
+
+    final = spark.read.parquet(out_dir)
+    assert final.count() == n_total
+    assert final.select("url").distinct().count() == n_total
+    assert spark.read.json(man_dir).agg(F.sum("doc_count")).head()[0] == n_total
+
+    clean_dir = str(tmp_path / "clean")
+    manifest.run_extraction_job(spark, pages, clean_dir,
+                                str(tmp_path / "clean_manifest"),
+                                num_buckets=8, group_size=2)
+    cols = [c for c in final.columns if c != "parse_time_ms"]
+    clean = spark.read.parquet(clean_dir).select(cols)
+    assert final.select(cols).exceptAll(clean).count() == 0
+    assert clean.exceptAll(final.select(cols)).count() == 0
+    pages.unpersist()
+
+
 def test_routing_column_native(spark):
     from defuddle_spark.spark.pipeline import extract_pages
     rows = [
