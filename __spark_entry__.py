@@ -680,9 +680,9 @@ def q_extract_twitter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Multi-domain routed extraction gate (round 6, VERDICT r5 #1): the nine
 # single-extractor gates above are folded into ONE query so every
 # oracle-backed entry fits the driver's correctness window. Each document
-# becomes one page whose domain is picked by doc_id % 9; the native rlike
-# routing column AND the kernel's registry dispatch both run, and the
-# oracle re-asserts, per archetype, exactly the column set its retired
+# becomes one page whose domain is picked by doc_id % 9; the kernel's
+# registry lookup dispatches each page and reports its route as the
+# extractor_route column, and the oracle re-asserts, per archetype, exactly the column set its retired
 # single gate asserted (columns outside that set are masked to NULL on
 # BOTH sides, so no assertion got weaker — see tests/test_retired_gates.py
 # for the retired gates still running full-corpus at sf0.001).
@@ -731,8 +731,8 @@ def q_extract_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All nine site extractors through ONE routed gate: the multi-domain
     corpus (doc_id % 9 picks the archetype) runs a single extraction whose
     per-url registry dispatch (registry.go:116-147) picks the right
-    extractor, and the native rlike routing column (extractor_route) is
-    asserted alongside. Columns an archetype's retired single gate did not
+    extractor, and the route that dispatch took (extractor_route, the
+    kernel's registry lookup) is asserted alongside. Columns an archetype's retired single gate did not
     assert are masked to NULL (matching the oracle), so each extractor's
     byte-identity contract is unchanged — just carried by one query."""
     from defuddle_spark.spark.pages import (ROUTED_ARCHETYPES,

@@ -9,7 +9,11 @@ Usage:
   SPARK_GRAFT_EXPLAIN_DIR=plans/r08 SPARK_GRAFT_EXPLAIN_SUFFIX=_before \
   python bench_extra.py repetition_stats dedup_clusters
 
-Prints one JSON line: {"queries": {name: [secs per rep, ...]}, "sf": ...}
+Each query first runs one untimed warm-up rep, so the timed reps exclude
+JVM start-up and the query's code generation.
+
+Prints one JSON line: {"queries": {name: [secs per rep, ...]},
+"warmup": {name: secs}, "sf": ...}
 """
 
 from __future__ import annotations
@@ -44,9 +48,19 @@ def main() -> None:
     spark = get_spark(cores=cpus, app_name="defuddle-bench-extra")
     spark.sparkContext.setLogLevel("ERROR")
 
+    def run(name: str, fn) -> float:
+        spark.sparkContext.setJobDescription(f"bench_extra: {name}")
+        t = time.monotonic()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        secs = round(time.monotonic() - t, 3)
+        release_cached()
+        spark.sparkContext.setJobDescription(None)
+        return secs
+
     fns = entry.queries()
     names = sys.argv[1:] or list(fns)
     out: dict = {}
+    warmup: dict = {}
     for name in names:
         fn = fns[name]
         if explain_dir:
@@ -57,18 +71,12 @@ def main() -> None:
             with open(f"{explain_dir}/{name}{suffix}.txt", "w") as fh:
                 fh.write(buf.getvalue())
             release_cached()
-        times = []
-        for _ in range(reps):
-            spark.sparkContext.setJobDescription(f"bench_extra: {name}")
-            t = time.monotonic()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            times.append(round(time.monotonic() - t, 3))
-            release_cached()
-            spark.sparkContext.setJobDescription(None)
-        out[name] = times
-        print(f"## {name}: {times}", file=sys.stderr)
-    print(json.dumps({"queries": out, "sf": sf_dir, "cpus": cpus,
-                      "reps": reps}))
+        warmup[name] = run(name, fn)
+        out[name] = [run(name, fn) for _ in range(reps)]
+        print(f"## {name}: {out[name]} (warm-up {warmup[name]})",
+              file=sys.stderr)
+    print(json.dumps({"queries": out, "warmup": warmup, "sf": sf_dir,
+                      "cpus": cpus, "reps": reps}))
     spark.stop()
 
 

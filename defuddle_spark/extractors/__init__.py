@@ -7,16 +7,16 @@ registry.go:152-163); regex patterns match the full URL. Built-ins are
 registered in the reference's order (registry.go:210-359): Twitter,
 YouTube, Reddit, HackerNews, ChatGPT, Claude, Grok, Gemini, GitHub.
 
-In the Spark job the routing decision is also precomputed as a native
-`rlike` column for DataFrame-level stats/partitioning; the kernel's
-dispatch here is authoritative.
+`lookup` is the one routing decision. It needs only the url, so the
+kernel runs it once per document, reuses its pick for both passes and
+reports its name as the Spark job's `extractor_route` column.
 """
 
 from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
-from typing import Any, Dict, List, Optional
+from typing import Any, Dict, List, Optional, Tuple
 from urllib.parse import urlparse
 
 from ..dom import Document
@@ -49,7 +49,9 @@ class BaseExtractor:
         return type(self).__name__.removesuffix("Extractor")
 
 
-# Registry entries: (domain_patterns, url_regexes, cls) — first match wins
+# Registry entries: (domain_patterns, url_regexes, route name, cls) —
+# first match wins; the route name is the class name without "Extractor",
+# lowercased
 _REGISTRY: List[tuple] = []
 
 
@@ -58,20 +60,9 @@ def register(cls, domains: Optional[List[str]] = None,
     _REGISTRY.append((
         tuple(domains or ()),
         tuple(re.compile(p, re.IGNORECASE) for p in (url_patterns or ())),
+        cls.__name__.removesuffix("Extractor").lower(),
         cls,
     ))
-
-
-def url_patterns() -> List[tuple]:
-    """(regex_source, extractor_name) pairs for DataFrame-side routing."""
-    out = []
-    for domains, regexes, cls in _REGISTRY:
-        name = cls.__name__.removesuffix("Extractor").lower()
-        for d in domains:
-            out.append((r"https?://([^/]*\.)?" + re.escape(d), name))
-        for p in regexes:
-            out.append((p.pattern, name))
-    return out
 
 
 def _matches(url: str, domain: str, domains: tuple, regexes: tuple) -> bool:
@@ -82,19 +73,26 @@ def _matches(url: str, domain: str, domains: tuple, regexes: tuple) -> bool:
     return any(rx.search(url) for rx in regexes)
 
 
-def find_extractor(doc: Document, url: str,
-                   schema_org_data: Any = None) -> Optional[BaseExtractor]:
-    """registry.go:116-147 — first extractor whose patterns match the URL."""
+def lookup(url: str) -> Tuple[Optional[str], Optional[type]]:
+    """registry.go:116-147 — (route name, class) of the first registered
+    extractor whose patterns match ``url``; (None, None) if none does."""
     if not url:
-        return None
+        return None, None
     try:
         domain = urlparse(url).hostname or ""
     except ValueError:
         domain = ""
-    for domains, regexes, cls in _REGISTRY:
+    for domains, regexes, name, cls in _REGISTRY:
         if _matches(url, domain, domains, regexes):
-            return cls(doc, url, schema_org_data)
-    return None
+            return name, cls
+    return None, None
+
+
+def find_extractor(doc: Document, url: str,
+                   schema_org_data: Any = None) -> Optional[BaseExtractor]:
+    """The extractor ``lookup`` picks for ``url``, bound to ``doc``."""
+    cls = lookup(url)[1]
+    return None if cls is None else cls(doc, url, schema_org_data)
 
 
 # Built-ins, registered in the reference's order (registry.go:210-359)

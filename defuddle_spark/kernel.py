@@ -29,6 +29,7 @@ from typing import List, Optional
 
 from . import constants, metadata, schema_org, scoring
 from .dom import Document, Element, parse
+from .extractors import lookup
 from .selectors import SelectorGroup, find_all
 from .standardize import standardize_content
 
@@ -100,6 +101,9 @@ class Result:
     word_count: int = 0
     parse_time_ms: int = 0
     extractor_type: Optional[str] = None
+    # Registry name of the extractor the url routes to (extractors.lookup),
+    # set whether or not that extractor could extract this page.
+    extractor_route: Optional[str] = None
     schema_org: str = "[]"
     meta_tags: List[dict] = field(default_factory=list)
     retry_used: bool = False
@@ -383,9 +387,11 @@ def _result(pre: tuple, content: str, text: str, **overrides) -> Result:
         meta_tags=meta_tags, **fields)
 
 
-def _pass(doc: Document, pre: tuple, url: str, options: Options) -> Result:
+def _pass(doc: Document, pre: tuple, url: str, extractor_cls: Optional[type],
+          options: Options) -> Result:
     """One parseInternal attempt (defuddle.go:393-619) on a freshly parsed
-    ``doc``; ``pre`` is its metadata, read before any mutation."""
+    ``doc``; ``pre`` is its metadata, read before any mutation, and
+    ``extractor_cls`` the registry's pick for ``url`` (or None)."""
     start = time.monotonic()
     schema_items, _, meta = pre
     dbg = None
@@ -401,8 +407,8 @@ def _pass(doc: Document, pre: tuple, url: str, options: Options) -> Result:
             len(schema_items), "")
 
     # Site-specific extractor dispatch (defuddle.go:420-492)
-    from .extractors import find_extractor  # local import to avoid cycles
-    extractor = find_extractor(doc, url, schema_items)
+    extractor = (None if extractor_cls is None
+                 else extractor_cls(doc, url, schema_items))
     if extractor is not None and extractor.can_extract():
         name = extractor.name()
         extracted = extractor.extract()
@@ -527,15 +533,19 @@ def extract_document(html_str: str, url: str = "",
     from source only if a retry actually fires (the reference re-parses
     for both passes). A pass that used a site extractor skips the retry:
     the reference's retry would re-dispatch the same extractor, yield an
-    equal word count, and keep the first result.
+    equal word count, and keep the first result. The registry lookup needs
+    only the url, so it runs once and both passes use its pick; its name
+    is the result's ``extractor_route``, on the error path too.
     """
     if options is None:
         options = Options()
     url = url or options.url
+    route = None
     try:
+        route, extractor_cls = lookup(url)
         doc = parse(html_str)
         pre = _page_metadata(doc, url)
-        result = _pass(doc, pre, url, options)
+        result = _pass(doc, pre, url, extractor_cls, options)
         # The retry differs from the first pass ONLY by
         # remove_partial_selectors=False. If the first pass's partial
         # branch removed nothing, the retry is bit-identical to it, and the
@@ -543,14 +553,16 @@ def extract_document(html_str: str, url: str = "",
         if (result.word_count < RETRY_WORD_THRESHOLD
                 and result.extractor_type is None
                 and result.partial_removals > 0):
-            retry = _pass(parse(html_str), pre, url,
+            retry = _pass(parse(html_str), pre, url, extractor_cls,
                           replace(options, remove_partial_selectors=False))
             if retry.word_count > result.word_count:
                 retry.retry_used = True
-                return retry
+                result = retry
+        result.extractor_route = route
         return result
     except Exception as exc:  # per-doc failure isolation (north_rule)
-        res = Result(error=f"{type(exc).__name__}: {exc}")
+        res = Result(error=f"{type(exc).__name__}: {exc}",
+                     extractor_route=route)
         try:
             doc = parse(html_str)
             res.content = doc.body.inner_html()

@@ -5,7 +5,11 @@ Arrow-batched kernel, everything structural is native so Catalyst can
 prune/push/coalesce):
 
     scan → filter(html nonempty) → [salted repartition by xxhash64(url)]
-         → mapInPandas(kernel) → routing column (native rlike) → sink
+         → mapInPandas(kernel, extractor route included) → sink
+
+The kernel's registry lookup is the one routing decision: it already
+dispatches each url, so it also reports the route as a column, and the
+driver builds no routing expression.
 
 Skew handling (SURVEY.md §4.2): HTML sizes are heavy-tailed; salting by
 url-hash spreads giant docs across partitions instead of letting a
@@ -18,7 +22,7 @@ re-coalesces afterwards.
 from __future__ import annotations
 
 import warnings
-from typing import Iterator, Optional
+from typing import Iterator, List, Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
@@ -62,13 +66,17 @@ RESULT_SCHEMA = StructType([
     StructField("content_markdown", StringType()),
 ])
 
-_RESULT_FIELDS = [f.name for f in RESULT_SCHEMA.fields]
+# RESULT_SCHEMA plus the registry name of each url's extractor
+# (``kernel.Result.extractor_route``), for with_routing_column=True.
+ROUTED_SCHEMA = StructType(
+    RESULT_SCHEMA.fields + [StructField("extractor_route", StringType())])
 
 
-def _extract_batches(batches: Iterator[pd.DataFrame],
-                     options) -> Iterator[pd.DataFrame]:
+def _extract_batches(batches: Iterator[pd.DataFrame], options,
+                     fields: List[str]) -> Iterator[pd.DataFrame]:
     """Arrow-batch kernel loop: one Python call per batch, one kernel call
-    per doc, every doc under the same ``kernel.Options``.
+    per doc, every doc under the same ``kernel.Options``. Emits the
+    ``fields`` columns of each ``kernel.Result``, in that order.
 
     Imported lazily on executors; selector tables compile once per worker
     process (module-level caches in defuddle_spark.selectors).
@@ -89,20 +97,9 @@ def _extract_batches(batches: Iterator[pd.DataFrame],
             debug_json = None if r.debug_info is None else _json.dumps(
                 r.debug_info, ensure_ascii=False, separators=(",", ":"))
             row = dict(vars(r), url=url, debug_json=debug_json)
-            rows.append([row[f] for f in _RESULT_FIELDS])
-        yield pd.DataFrame(rows, columns=_RESULT_FIELDS)
+            rows.append([row[f] for f in fields])
+        yield pd.DataFrame(rows, columns=fields)
     drop_zip_importers()
-
-
-def routing_column() -> F.Column:
-    """Native rlike routing (registry.go patterns) — vectorized, JVM-side."""
-    from defuddle_spark.extractors import url_patterns
-
-    col = F.lit(None).cast(StringType())
-    # build right-to-left so the FIRST registered pattern wins
-    for pattern, name in reversed(url_patterns()):
-        col = F.when(F.col("url").rlike(pattern), F.lit(name)).otherwise(col)
-    return col
 
 
 def extract_pages(pages: DataFrame,
@@ -120,6 +117,9 @@ def extract_pages(pages: DataFrame,
     scatter instead of clustering in a url range; without it, narrow
     inputs are spread the same way and wide inputs keep their byte-sized
     splits. The kernel then runs as one ``mapInPandas`` over that frame.
+
+    ``with_routing_column`` adds ``extractor_route``: the registry name
+    of the extractor each url routes to (``extractors.lookup``), or null.
 
     ``kernel_options`` are ``kernel.Options`` fields (for example
     ``{"remove_images": True}``); an unknown key raises here, before any
@@ -148,8 +148,7 @@ def extract_pages(pages: DataFrame,
         from defuddle_spark.spark.partitions import spread_narrow
         df = spread_narrow(df, F.xxhash64(F.col("url")))
 
-    result = df.mapInPandas(lambda it: _extract_batches(it, options),
-                            schema=RESULT_SCHEMA)
-    if with_routing_column:
-        result = result.withColumn("extractor_route", routing_column())
-    return result
+    schema = ROUTED_SCHEMA if with_routing_column else RESULT_SCHEMA
+    fields = schema.fieldNames()
+    return df.mapInPandas(lambda it: _extract_batches(it, options, fields),
+                          schema=schema)

@@ -468,9 +468,9 @@ def test_retry_skip_is_output_equivalent():
     opts = Options()
     doc = K.parse(short_no_partial)
     pre = K._page_metadata(doc, "")
-    first = K._pass(doc, pre, "", opts)
+    first = K._pass(doc, pre, "", None, opts)
     retry = K._pass(
-        K.parse(short_no_partial), pre, "",
+        K.parse(short_no_partial), pre, "", None,
         dataclasses.replace(opts, remove_partial_selectors=False))
     expected = retry if retry.word_count > first.word_count else first
     assert fast.content == expected.content
@@ -641,3 +641,44 @@ def test_parse_count_per_document(monkeypatch):
         f'<section class="reader-comments-analysis"><p>{body}</p></section>'
         "</article></main></body></html>")
     assert (n, r.retry_used) == (2, True)
+
+
+def test_route_reported_when_the_pass_raises(monkeypatch):
+    """The per-document error path still names the url's route."""
+    from defuddle_spark import kernel as K
+
+    def boom(*args):
+        raise RuntimeError("injected pass failure")
+
+    monkeypatch.setattr(K, "_pass", boom)
+    r = extract_document("<html><body><p>x</p></body></html>",
+                         url="https://GitHub.com/a/b/issues/1")
+    assert r.error == "RuntimeError: injected pass failure"
+    assert r.extractor_route == "github"
+    assert r.extractor_type is None
+
+
+def test_retried_document_makes_one_registry_lookup(monkeypatch):
+    """Both passes of a retried page reuse one registry lookup. The url
+    routes to GitHub, whose extractor declines this generic page, so the
+    retry runs the generic path again."""
+    from defuddle_spark import kernel as K
+
+    calls = []
+    real_lookup = K.lookup
+
+    def counting_lookup(url):
+        calls.append(url)
+        return real_lookup(url)
+
+    monkeypatch.setattr(K, "lookup", counting_lookup)
+    body = "Recovered paragraph with enough words to win the retry pass. " * 24
+    url = "https://github.com/o/r/issues/1"
+    r = extract_document(
+        "<html><head><title>R</title></head><body><main><article>"
+        "<h1>R</h1><p>Lead.</p>"
+        f'<section class="reader-comments-analysis"><p>{body}</p></section>'
+        "</article></main></body></html>", url=url)
+    assert r.error is None and r.retry_used
+    assert (r.extractor_route, r.extractor_type) == ("github", None)
+    assert calls == [url]

@@ -33,7 +33,7 @@ OPTION_SETS = (
     (False, Options(remove_images=True, url=_HN)),
 )
 
-GOLDEN = "2727ab617b000af84395a8c017a81dc5264f91d8214bd539f0ba139ef8b017c0"
+GOLDEN = "278901bbd9b3f1b52d9be02bac920be1acb198954e01880ce230c235f479f63b"
 
 
 def kernel_digest(sf_dirs) -> str:

@@ -70,6 +70,28 @@ def test_resume_after_partial_failure(spark, tmp_path):
     pages.unpersist()
 
 
+def _assert_resumed_like_a_clean_run(spark, pages, tmp_path, n_total):
+    """The resumed job under ``tmp_path`` (``out``, ``manifest``) holds
+    every url once, its manifest's doc_count sums to the input count, and
+    its rows equal those of a crash-free run (8 buckets in groups of 2)."""
+    from defuddle_spark.spark import manifest
+
+    out_dir, man_dir = str(tmp_path / "out"), str(tmp_path / "manifest")
+    final = spark.read.parquet(out_dir)
+    assert final.count() == n_total
+    assert final.select("url").distinct().count() == n_total
+    assert spark.read.json(man_dir).agg(F.sum("doc_count")).head()[0] == n_total
+
+    clean_dir = str(tmp_path / "clean")
+    manifest.run_extraction_job(spark, pages, clean_dir,
+                                str(tmp_path / "clean_manifest"),
+                                num_buckets=8, group_size=2)
+    cols = [c for c in final.columns if c != "parse_time_ms"]
+    clean = spark.read.parquet(clean_dir).select(cols)
+    assert final.select(cols).exceptAll(clean).count() == 0
+    assert clean.exceptAll(final.select(cols)).count() == 0
+
+
 def test_resume_after_crash_between_write_and_record(spark, tmp_path,
                                                      monkeypatch):
     """A crash after a group's rows are written but before its manifest
@@ -104,20 +126,7 @@ def test_resume_after_crash_between_write_and_record(spark, tmp_path,
     m = manifest.run_extraction_job(spark, pages, out_dir, man_dir,
                                     num_buckets=8, group_size=2)
     assert m["buckets_done_before"] == 2 and m["groups_run"] == 3
-
-    final = spark.read.parquet(out_dir)
-    assert final.count() == n_total
-    assert final.select("url").distinct().count() == n_total
-    assert spark.read.json(man_dir).agg(F.sum("doc_count")).head()[0] == n_total
-
-    clean_dir = str(tmp_path / "clean")
-    manifest.run_extraction_job(spark, pages, clean_dir,
-                                str(tmp_path / "clean_manifest"),
-                                num_buckets=8, group_size=2)
-    cols = [c for c in final.columns if c != "parse_time_ms"]
-    clean = spark.read.parquet(clean_dir).select(cols)
-    assert final.select(cols).exceptAll(clean).count() == 0
-    assert clean.exceptAll(final.select(cols)).count() == 0
+    _assert_resumed_like_a_clean_run(spark, pages, tmp_path, n_total)
     pages.unpersist()
 
 
@@ -167,39 +176,77 @@ def test_resume_after_crash_inside_a_task(spark, tmp_path, monkeypatch):
     m = manifest.run_extraction_job(spark, pages, out_dir, man_dir,
                                     num_buckets=8, group_size=2)
     assert m["buckets_done_before"] == 2 and m["groups_run"] == 3
-
-    final = spark.read.parquet(out_dir)
-    assert final.count() == n_total
-    assert final.select("url").distinct().count() == n_total
-    assert spark.read.json(man_dir).agg(F.sum("doc_count")).head()[0] == n_total
-
-    clean_dir = str(tmp_path / "clean")
-    manifest.run_extraction_job(spark, pages, clean_dir,
-                                str(tmp_path / "clean_manifest"),
-                                num_buckets=8, group_size=2)
-    cols = [c for c in final.columns if c != "parse_time_ms"]
-    clean = spark.read.parquet(clean_dir).select(cols)
-    assert final.select(cols).exceptAll(clean).count() == 0
-    assert clean.exceptAll(final.select(cols)).count() == 0
+    _assert_resumed_like_a_clean_run(spark, pages, tmp_path, n_total)
     pages.unpersist()
 
 
-def test_routing_column_native(spark):
+def test_resume_after_crash_after_record(spark, tmp_path, monkeypatch):
+    """A crash right after a group's commit record lands leaves that
+    group committed. The resume skips it and runs the rest: every url
+    once, the manifest's doc_count equal to the input count, and the
+    same rows a crash-free run writes."""
+    from defuddle_spark.spark import manifest
+    from defuddle_spark.spark.pages import synthesize_pages
+
+    pages = synthesize_pages(spark, SF).select("url", "html").cache()
+    n_total = pages.count()
+    out_dir, man_dir = str(tmp_path / "out"), str(tmp_path / "manifest")
+
+    append = manifest._append_manifest
+    calls = []
+
+    def crash_after_second_record(manifest_dir, records):
+        append(manifest_dir, records)
+        calls.append(len(records))
+        if len(calls) == 2:
+            raise RuntimeError("injected crash after the commit record")
+
+    monkeypatch.setattr(manifest, "_append_manifest", crash_after_second_record)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        manifest.run_extraction_job(spark, pages, out_dir, man_dir,
+                                    num_buckets=8, group_size=2)
+    monkeypatch.setattr(manifest, "_append_manifest", append)
+    assert manifest.committed_buckets(spark, man_dir) == {0, 1, 2, 3}
+
+    m = manifest.run_extraction_job(spark, pages, out_dir, man_dir,
+                                    num_buckets=8, group_size=2)
+    assert m["buckets_done_before"] == 4 and m["groups_run"] == 2
+
+    _assert_resumed_like_a_clean_run(spark, pages, tmp_path, n_total)
+    pages.unpersist()
+
+
+def test_routing_column_is_the_kernel_dispatch(spark):
+    """``extractor_route`` is the registry name of the extractor
+    ``find_extractor`` picks for the url: case-insensitive, with the
+    registry's domain "contains" rule, whether or not that extractor can
+    extract the page."""
+    from defuddle_spark.dom import parse
+    from defuddle_spark.extractors import find_extractor
     from defuddle_spark.spark.pipeline import extract_pages
+    hn_html = b"<html><body><table class='fatitem'><tr class='athing'><td><span class='titleline'><a href='http://x'>T</a></span></td></tr></table></body></html>"
+    plain = b"<html><body><article><p>hello world</p></article></body></html>"
     rows = [
-        ("https://news.ycombinator.com/item?id=1",
-         b"<html><body><table class='fatitem'><tr class='athing'><td><span class='titleline'><a href='http://x'>T</a></span></td></tr></table></body></html>"),
-        ("https://example.com/post", b"<html><body><article><p>hello world</p></article></body></html>"),
+        ("https://news.ycombinator.com/item?id=1", hn_html),
+        ("https://example.com/post", plain),
+        ("https://News.YCombinator.com/item?id=1", hn_html),
+        ("https://notx.com/a", plain),
+        ("https://GitHub.com/a/b/issues/1", plain),
     ]
     df = spark.createDataFrame(rows, ["url", "html"])
+    plain_cols = extract_pages(df, with_routing_column=False).columns
+    assert extract_pages(df).columns == plain_cols + ["extractor_route"]
     out = extract_pages(df).select("url", "extractor_route", "extractor_type").collect()
     by_url = {r["url"]: r for r in out}
-    hn = by_url["https://news.ycombinator.com/item?id=1"]
-    assert hn["extractor_route"] == "hackernews"
-    assert hn["extractor_type"] == "hackernews"
-    other = by_url["https://example.com/post"]
-    assert other["extractor_route"] is None
-    assert other["extractor_type"] is None
+    assert len(by_url) == len(rows)
+    for url, html in rows:
+        pick = find_extractor(parse(html.decode()), url)
+        want = None if pick is None else pick.name().lower()
+        assert by_url[url]["extractor_route"] == want, url
+    assert [by_url[u]["extractor_route"] for u, _ in rows] == [
+        "hackernews", None, "hackernews", "twitter", "github"]
+    assert [by_url[u]["extractor_type"] for u, _ in rows] == [
+        "hackernews", None, "hackernews", None, None]
 
 
 def test_extraction_plan_prunes_columns(spark):
@@ -497,7 +544,7 @@ def test_stage_function_leaves_no_zip_importer_to_rescan(spark, tmp_path,
     import pandas as pd
 
     from defuddle_spark.kernel import Options
-    from defuddle_spark.spark.pipeline import _extract_batches
+    from defuddle_spark.spark.pipeline import RESULT_SCHEMA, _extract_batches
 
     zip_name = "defuddle_spark_pyfiles.zip"
     if py_files:
@@ -514,7 +561,7 @@ def test_stage_function_leaves_no_zip_importer_to_rescan(spark, tmp_path,
         # package, which they import from the repo first anyway
         spark.sparkContext.addPyFile(zip_path)
         sys.path[:] = driver_path  # only the workers need the zip
-    options = Options()
+    options, fields = Options(), RESULT_SCHEMA.fieldNames()
 
     def probe(batches):
         import importlib.util
@@ -531,7 +578,7 @@ def test_stage_function_leaves_no_zip_importer_to_rescan(spark, tmp_path,
         zip_cached = sum(p.endswith(zip_name) and
                          isinstance(f, zipimport.zipimporter)
                          for p, f in sys.path_importer_cache.items())
-        for _ in _extract_batches(batches, options):
+        for _ in _extract_batches(batches, options, fields):
             pass
         yield pd.DataFrame({
             "pid": [os.getpid()], "entered": [entered], "cached": [cached],
