@@ -62,9 +62,6 @@ class Debugger:
         self.statistics: dict = _statistics()
         self.extractor_used: str = ""
 
-    def is_enabled(self) -> bool:
-        return self.enabled
-
     # --- timers (debugger.go:84-101) ---
     def start_timer(self, operation: str) -> None:
         if self.enabled:

@@ -315,6 +315,21 @@ _NO_RECONSTRUCT = frozenset({
     "colgroup", "tbody", "td", "tfoot", "th", "thead", "tr",
 })
 
+# Start tags with an in-body rule of their own (document shell, frames,
+# forms, buttons, table structure, ruby, implied end tags, headings,
+# foreign content, nobr, scope markers): _TreeBuilder.handle_starttag's
+# fast path never takes them.
+_START_RULES = frozenset({
+    "image", "html", "head", "body", "frameset", "frame", "form", "button",
+    "caption", "col", "colgroup", "tbody", "td", "tfoot", "th", "thead",
+    "tr", "table", "rb", "rtc", "rp", "rt", "li", "dd", "dt", "option",
+    "h1", "h2", "h3", "h4", "h5", "h6", "svg", "math", "nobr", "applet",
+    "object", "marquee", "template",
+})
+
+# End tags with a rule of their own even when they name the current node.
+_END_RULES = frozenset({"br", "html", "body", "head", "form"})
+
 # Insertion contexts that trigger foster parenting, and the start tags that
 # are legal inside them (x/net/html inTableIM; simplified).
 _TABLE_CTX = frozenset({"table", "tbody", "tfoot", "thead", "tr"})
@@ -405,7 +420,7 @@ class Text(Node):
     type = TEXT
 
     def __init__(self, data: str) -> None:
-        super().__init__()
+        self.parent = None
         self.data = data
 
     def text(self) -> str:
@@ -420,7 +435,7 @@ class Comment(Node):
     type = COMMENT
 
     def __init__(self, data: str) -> None:
-        super().__init__()
+        self.parent = None
         self.data = data
 
     def text(self) -> str:
@@ -432,7 +447,7 @@ class Element(Node):
     type = ELEMENT
 
     def __init__(self, tag: str, attrs: Optional[list] = None) -> None:
-        super().__init__()
+        self.parent = None
         self.tag = tag
         # ordered list of [name, value]; first occurrence wins on duplicates
         self.attrs: list = attrs if attrs is not None else []
@@ -527,17 +542,6 @@ class Element(Node):
             node = stack.pop()
             if node.type == ELEMENT:
                 yield node
-                cs = node.children
-                if cs:
-                    stack.extend(cs[::-1])
-
-    def iter_nodes(self) -> Iterator[Node]:
-        """All descendant nodes (any type) in document order, excluding self."""
-        stack = self.children[::-1]
-        while stack:
-            node = stack.pop()
-            yield node
-            if node.type == ELEMENT:
                 cs = node.children
                 if cs:
                     stack.extend(cs[::-1])
@@ -1223,6 +1227,37 @@ class _TreeBuilder(HTMLParser):
             # handled via in-body rules while STAYING in after-body
             # (13.2.6.4.19's explicit html case)
             self.after_body = 0
+        # Fast path: a tag with no rule of its own (see _START_RULES),
+        # inserted at the current HTML node in body (or a head element
+        # before the body), with no select, table or template open, no
+        # p for it to close and nothing in the active formatting list to
+        # reconstruct. Every rule below then reduces to "append, push".
+        open_ = self.open
+        if (tag not in _START_RULES and not self.ns[-1]
+                and not self.frameset_doc
+                and (self.body_started or tag in HEAD_ELEMENTS)
+                and (not self.afe or tag in _NO_RECONSTRUCT)
+                and "select" not in open_ and "table" not in open_
+                and "template" not in open_
+                and ("p" not in open_ or tag not in _P_CLOSERS)):
+            if not attrs:
+                pairs = []
+            elif len(attrs) == 1:
+                k, v = attrs[0]
+                pairs = [[k.lower(), "" if v is None else v]]
+            else:
+                pairs = self._plain_attrs(attrs)
+            el = Element(tag, pairs)
+            cur = self.stack[-1]
+            el.parent = cur
+            cur.children.append(el)
+            if tag not in VOID_ELEMENTS:
+                self.ns.append("")
+                self.stack.append(el)
+                open_[tag] = open_.get(tag, 0) + 1
+                if tag in _FORMATTING:
+                    self.afe.append(el)
+            return
         # Foreign-content dispatch (spec 13.2.6, "tree construction
         # dispatcher"; x/net/html inForeignContent + parseForeignContent):
         # when the current node is SVG/MathML and the token neither hits an
@@ -1526,6 +1561,21 @@ class _TreeBuilder(HTMLParser):
         self._initial = False  # any end tag leaves the initial mode too
         if tag not in ("html", "body", "head"):
             self.after_body = 0  # other end tags reprocess in body
+        # Fast path: an end tag for the current HTML node, with no rule of
+        # its own (shell tags, </br>, </form>). Every rule below pops just
+        # that node; for a formatting element that is the last entry of
+        # the active formatting list, the adoption agency finds no
+        # furthest block and also drops the entry.
+        cur = self.stack[-1]
+        if (cur.tag == tag and tag not in _END_RULES and not self.ns[-1]
+                and not self.frameset_doc):
+            if tag not in _FORMATTING:
+                self._truncate(len(self.stack) - 1)
+                return
+            if self.afe and self.afe[-1] is cur:
+                self.afe.pop()
+                self._truncate(len(self.stack) - 1)
+                return
         if tag == "br":
             # Spec in-body </br>: parse error; act as a <br> start tag.
             self.handle_starttag("br", [])
@@ -1754,15 +1804,20 @@ class _TreeBuilder(HTMLParser):
 
 
 class Document:
-    """Parsed HTML document with html/head/body shell."""
+    """Parsed HTML document with html/head/body shell.
 
-    __slots__ = ("root", "html", "head", "body")
+    ``gathered`` holds what a consumer collected from the unmutated tree
+    in one walk (the kernel's ``kernel._Gathered``), so it lives and dies
+    with the document; None until first asked for."""
+
+    __slots__ = ("root", "html", "head", "body", "gathered")
 
     def __init__(self, root: Element, html: Element, head: Element, body: Element):
         self.root = root
         self.html = html
         self.head = head
         self.body = body
+        self.gathered = None
 
     def descendants(self) -> Iterator[Element]:
         return self.html_descendants()
@@ -1844,6 +1899,11 @@ def _fast_tokenize(b: "_TreeBuilder", s: str) -> None:
     handle_data = b.handle_data
     b.cdata_elem = None  # single source of truth for CDATA/RCDATA mode
     cdata_set = b.CDATA_CONTENT_ELEMENTS
+    # spec attribute-mode charrefs for the production tree builder;
+    # handlers without the flag (the stdlib parity recorder) keep
+    # html.parser's text-mode decoding
+    unescape_value = (_unescape_attr if getattr(b, "SPEC_ATTR_CHARREFS", False)
+                      else _unescape)
 
     while i < n:
         # -- data up to the next interesting position --
@@ -1879,7 +1939,7 @@ def _fast_tokenize(b: "_TreeBuilder", s: str) -> None:
         # -- dispatch on the construct at '<' --
         c = s[i + 1] if i + 1 < n else ""
         if c.isascii() and c.isalpha():
-            k = _fast_starttag(b, s, i, cdata_set)
+            k = _fast_starttag(b, s, i, cdata_set, unescape_value)
             # spec PLAINTEXT tokenizer state: once the tree builder has
             # actually inserted a <plaintext> element (x/net/html parity:
             # not when the token was ignored, e.g. inside a select), the
@@ -1939,7 +1999,49 @@ def _fast_tokenize(b: "_TreeBuilder", s: str) -> None:
         handle_data(_unescape(seg) if "&" in seg else seg)
 
 
-def _fast_starttag(b: "_TreeBuilder", s: str, i: int, cdata_set) -> int:
+# A well-formed start tag: html.parser's maximal tag name, then attributes
+# each led by ASCII whitespace, with no value or an ``=`` directly followed
+# by a quoted value or an unquoted one that starts with neither a quote
+# nor ``=``, then optional whitespace and ``>`` or ``/>``. On such a tag
+# html.parser's tolerant regexes split at the same places, so one match
+# (plus one findall over the attribute block) yields its events; anything
+# else takes the tolerant path below. Possessive quantifiers keep the
+# name and each value maximal, as html.parser's greedy ones are.
+_STARTTAG_WELLFORMED = re.compile(
+    r"<([a-zA-Z][^\t\n\r\f />\x00]*+)"
+    r"((?:[\t\n\r\f ]++[^\s/>\"'=<]++"
+    r"(?:=(?:\"[^\"]*+\"|'[^']*+'|[^\s\"'=>][^\s>]*+))?)*+)"
+    r"[\t\n\r\f ]*+(/?)>")
+_ATTR_WELLFORMED = re.compile(
+    r"([^\s/>\"'=<]++)(?:=(\"[^\"]*+\"|'[^']*+'|[^\s\"'=>][^\s>]*+))?")
+
+
+def _fast_starttag(b: "_TreeBuilder", s: str, i: int, cdata_set,
+                   unescape_value) -> int:
+    m = _STARTTAG_WELLFORMED.match(s, i)
+    if m is not None:
+        tag, block, slash = m.groups()
+        tag = tag.lower()
+        attrs = []
+        if block:
+            for name, value in _ATTR_WELLFORMED.findall(block):
+                if not value:
+                    value = None  # no "=": valueless attribute
+                else:
+                    if value[0] == '"' or value[0] == "'":
+                        value = value[1:-1]
+                    if value:
+                        value = unescape_value(value)
+                attrs.append((name.lower(), value))
+        if slash:
+            b.handle_startendtag(tag, attrs)
+        else:
+            b.handle_starttag(tag, attrs)
+            if tag in cdata_set:
+                b.cdata_elem = tag
+        return m.end()
+
+    # tolerant path: html.parser's check_for_whole_start_tag ...
     m = _hp.locatestarttagend_tolerant.match(s, i)
     j = m.end()
     nxt = s[j:j + 1]
@@ -1957,6 +2059,7 @@ def _fast_starttag(b: "_TreeBuilder", s: str, i: int, cdata_set) -> int:
     else:
         endpos = j if j > i else i + 1
 
+    # ... and parse_starttag
     attrs = []
     m = _hp.tagfind_tolerant.match(s, i + 1)
     k = m.end()
@@ -1972,12 +2075,7 @@ def _fast_starttag(b: "_TreeBuilder", s: str, i: int, cdata_set) -> int:
                 attrvalue[:1] == '"' == attrvalue[-1:]:
             attrvalue = attrvalue[1:-1]
         if attrvalue:
-            # spec attribute-mode charrefs for the production tree
-            # builder; handlers without the flag (the stdlib parity
-            # recorder) keep html.parser's text-mode decoding
-            attrvalue = (_unescape_attr(attrvalue)
-                         if getattr(b, "SPEC_ATTR_CHARREFS", False)
-                         else _unescape(attrvalue))
+            attrvalue = unescape_value(attrvalue)
         attrs.append((attrname.lower(), attrvalue))
         k = am.end()
 
@@ -1995,10 +2093,9 @@ def _fast_starttag(b: "_TreeBuilder", s: str, i: int, cdata_set) -> int:
 
 
 def _fast_endtag(b: "_TreeBuilder", s: str, i: int) -> int:
-    m = _hp.endendtag.search(s, i + 1)
-    if not m:
+    gtpos = s.find(">", i + 1) + 1  # html.parser's endendtag search
+    if not gtpos:
         return -1
-    gtpos = m.end()
     m = _hp.endtagfind.match(s, i)
     if not m:
         if b.cdata_elem is not None:

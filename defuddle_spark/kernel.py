@@ -17,6 +17,15 @@ Reimplements the reference's parse pipeline over one HTML document:
 The Spark job (spark/pipeline.py) calls `extract_document_bytes` once per
 row inside mapInPandas (Arrow batches); this module itself is Spark-free so
 it can be unit-tested without a JVM.
+
+Parse once, walk once: each pass parses the page once, and one gathering
+walk over the unmutated tree (``_gather``, kept on the Document) collects
+everything the phases before content selection read from the whole
+document: meta tags, JSON-LD scripts and metadata's probes, img/svg and
+media elements, entry-point matches, the scoring fallbacks' candidates,
+inline-styled elements and the selector-removal candidates. Those phases
+only prune the tree, so each reads its gathered list and skips what an
+earlier phase detached; none walks the document again.
 """
 
 from __future__ import annotations
@@ -145,6 +154,136 @@ def decode_html(data: bytes) -> str:
 
 
 # ---------------------------------------------------------------------------
+# The gathering walk
+# ---------------------------------------------------------------------------
+
+_MEDIA_TAGS = frozenset({"img", "svg", "picture", "video", "canvas"})
+_CANDIDATE_TAGS = frozenset({"div", "section", "article", "main"})
+_TEST_ATTRIBUTES = frozenset(constants.TEST_ATTRIBUTES)
+
+
+class _Gathered:
+    """Everything the kernel reads from the whole document before content
+    selection, from one walk of the unmutated tree (``_gather``), in
+    document order: ``meta`` and JSON-LD ``script`` elements, metadata's
+    DomProbes, img/svg (``images``) and every removable medium
+    (``media``), the entry-point matches as (element, priority index),
+    the scoring fallbacks' ``td`` cells and candidate blocks, elements
+    with an inline style, and the selector-removal candidates as
+    (element, matches a partial pattern), kept when that or an exact
+    selector matches.
+
+    Until content selection the kernel only prunes the tree, so an
+    element still attached keeps the attributes and ancestors it was
+    gathered with; consumers skip the ones detached since (``_live``).
+    Pruning only ever turns a selector match false, so the candidates
+    hold every element that can match later."""
+
+    __slots__ = ("metas", "jsonld", "probes", "images", "media", "entries",
+                 "cells", "candidates", "styled", "clutter")
+
+
+def _gather(root: Element) -> _Gathered:
+    g = _Gathered()
+    metas, jsonld, images, media, entries = [], [], [], [], []
+    cells, candidates, styled, clutter = [], [], [], []
+    probes = metadata.DomProbes()
+    probe = probes.add
+    exact_match = _EXACT_GROUP.matches
+    partial_search = _PARTIAL_RE.search
+    tag_tbl, id_tbl = _ENTRY_TAGS, _ENTRY_IDS
+    cls_tbl, role_tbl = _ENTRY_CLASSES, _ENTRY_ROLES
+    for el in root.descendants():
+        tag = el.tag
+        if tag == "meta":
+            metas.append(el)
+        elif tag in _MEDIA_TAGS:
+            if tag == "img" or tag == "svg":
+                images.append(el)
+            media.append(el)
+        elif tag == "td":
+            cells.append(el)
+        elif tag in _CANDIDATE_TAGS:
+            candidates.append(el)
+            i = tag_tbl.get(tag)
+            if i is not None:
+                entries.append((el, i))
+        # attribute names are unique per element (the tree builder keeps
+        # the first of duplicates), so one scan answers every el.get
+        partial = False
+        for k, v in el.attrs:
+            if k == "id":
+                i = id_tbl.get(v)
+                if i is not None:
+                    entries.append((el, i))
+            elif k == "class":
+                for token in v.split():
+                    i = cls_tbl.get(token)
+                    if i is not None:
+                        entries.append((el, i))
+            elif k == "role":
+                i = role_tbl.get(v)
+                if i is not None:
+                    entries.append((el, i))
+            elif k == "style":
+                if v:
+                    styled.append(el)
+            elif k == "type":
+                if tag == "script" and v == "application/ld+json":
+                    jsonld.append(el)
+            if (not partial and v and k in _TEST_ATTRIBUTES
+                    and partial_search(v.lower())):
+                partial = True
+        probe(el)
+        if partial or exact_match(el):
+            clutter.append((el, partial))
+    g.metas, g.jsonld, g.probes = metas, jsonld, probes
+    g.images, g.media, g.entries = images, media, entries
+    g.cells, g.candidates = cells, candidates
+    g.styled, g.clutter = styled, clutter
+    return g
+
+
+def _gathered(doc: Document) -> _Gathered:
+    """``doc``'s gathered index, walking it on first use."""
+    g = doc.gathered
+    if g is None:
+        g = doc.gathered = _gather(doc.html)
+    return g
+
+
+def _attached(doc: Document):
+    """A test for "still in ``doc``": an element is attached iff its
+    parent is, so each node's answer is remembered and a run of tests
+    over a document's elements costs O(elements) in all."""
+    known = {doc.html: True}
+
+    def live(el: Element) -> bool:
+        path = []
+        node = el
+        while True:
+            ok = known.get(node)
+            if ok is not None:
+                break
+            path.append(node)
+            node = node.parent
+            if node is None:
+                ok = False
+                break
+        for n in path:
+            known[n] = ok
+        return ok
+
+    return live
+
+
+def _live(doc: Document, elements: list) -> list:
+    """The ``elements`` still attached to ``doc``, in their order."""
+    live = _attached(doc)
+    return [el for el in elements if live(el)]
+
+
+# ---------------------------------------------------------------------------
 # Mobile styles (R1 — defuddle.go:1291-1339)
 # ---------------------------------------------------------------------------
 
@@ -164,6 +303,8 @@ def apply_mobile_styles(doc: Document, mobile_styles: list) -> None:
         for el in find_all(doc.html, selector):
             existing = el.get("style") or ""
             el.set_attr("style", existing + styles)
+    if mobile_styles:
+        doc.gathered = None  # styles changed: gather again on next use
 
 
 # ---------------------------------------------------------------------------
@@ -172,9 +313,7 @@ def apply_mobile_styles(doc: Document, mobile_styles: list) -> None:
 
 def collect_meta_tags(doc: Document) -> List[dict]:
     tags: List[dict] = []
-    for el in doc.html.descendants():
-        if el.tag != "meta":
-            continue
+    for el in _live(doc, _gathered(doc).metas):
         content = el.get("content")
         if content:
             tags.append({
@@ -190,41 +329,18 @@ def collect_meta_tags(doc: Document) -> List[dict]:
 # ---------------------------------------------------------------------------
 
 def find_main_content(doc: Document) -> Element:
-    # First match per entry selector captured in ONE walk (equivalent to
-    # the reference's per-selector querySelector sweeps: each selector's
-    # winner is its first doc-order match, then the first selector with
-    # any match wins — defuddle.go:649-663).
-    matches: list = [None] * _N_ENTRIES
-    remaining = _N_ENTRIES
-    tag_tbl, id_tbl = _ENTRY_TAGS, _ENTRY_IDS
-    cls_tbl, role_tbl = _ENTRY_CLASSES, _ENTRY_ROLES
-    for el in doc.html.descendants():
-        i = tag_tbl.get(el.tag)
-        if i is not None and matches[i] is None:
-            matches[i] = el
-            remaining -= 1
-        for k, v in el.attrs:
-            if k == "id":
-                i = id_tbl.get(v)
-            elif k == "class":
-                for token in v.split():
-                    j = cls_tbl.get(token)
-                    if j is not None and matches[j] is None:
-                        matches[j] = el
-                        remaining -= 1
-                continue
-            elif k == "role":
-                i = role_tbl.get(v)
-            else:
-                continue
-            if i is not None and matches[i] is None:
-                matches[i] = el
-                remaining -= 1
-        if matches[0] is not None or remaining == 0:
-            break
-    for el in matches:
-        if el is not None:
-            return el
+    # The reference sweeps each entry selector in priority order and takes
+    # the first doc-order match of the first selector with any match
+    # (defuddle.go:649-663): the gathered match of least entry index,
+    # first in document order among its equals.
+    g = _gathered(doc)
+    live = _attached(doc)
+    best, best_i = None, _N_ENTRIES
+    for el, i in g.entries:
+        if i < best_i and live(el):
+            best, best_i = el, i
+    if best is not None:
+        return best
     table_content = _find_table_based_content(doc)
     if table_content is not None:
         return table_content
@@ -239,15 +355,14 @@ def _find_table_based_content(doc: Document) -> Optional[Element]:
     # table comes up once per enclosing table; first occurrences are the
     # tds with a table ancestor in document order, and a repeat can never
     # beat itself under find_best_element's strict >.
-    cells = [d for d in doc.html.descendants()
-             if d.tag == "td" and d.closest("table") is not None]
+    cells = [d for d in _live(doc, _gathered(doc).cells)
+             if d.closest("table") is not None]
     return scoring.find_best_element(cells, 50)
 
 
 def _find_content_by_scoring(doc: Document) -> Optional[Element]:
-    candidates = [d for d in doc.html.descendants()
-                  if d.tag in ("div", "section", "article", "main")]
-    return scoring.find_best_element(candidates, 50)
+    return scoring.find_best_element(
+        _live(doc, _gathered(doc).candidates), 50)
 
 
 # ---------------------------------------------------------------------------
@@ -255,34 +370,29 @@ def _find_content_by_scoring(doc: Document) -> Optional[Element]:
 # ---------------------------------------------------------------------------
 
 def remove_by_selector(doc: Document, remove_exact: bool, remove_partial: bool) -> int:
-    """Single-walk match-any sweep; output-equivalent to the reference's
+    """Single-sweep match-any removal; output-equivalent to the reference's
     ordered per-selector passes (see SelectorGroup docstring for why).
+    It sweeps the gathered candidates still attached and re-tests the
+    exact selectors: one with an ancestor step may stop matching once an
+    earlier removal in this sweep cut the element off that ancestor.
 
     Returns the number of elements removed by the *partial* branch — the
     retry loop uses it to skip the second pass when it provably cannot
     change the output (see extract_document)."""
-    root = doc.html
+    live = _attached(doc)
     partial_removed = 0
-    for el in list(root.descendants()):
+    for el, partial in [c for c in _gathered(doc).clutter if live(c[0])]:
         if remove_exact and _EXACT_GROUP.matches(el):
             el.remove()
-            continue
-        if remove_partial:
-            for attr in constants.TEST_ATTRIBUTES:
-                value = el.get(attr)
-                if value and _PARTIAL_RE.search(value.lower()):
-                    el.remove()
-                    partial_removed += 1
-                    break
+        elif remove_partial and partial:
+            el.remove()
+            partial_removed += 1
     return partial_removed
 
 
 def remove_hidden_elements(doc: Document) -> None:
-    for el in list(doc.html.descendants()):
-        style = el.get("style")
-        if not style:
-            continue
-        lower = style.lower()
+    for el in _live(doc, _gathered(doc).styled):
+        lower = (el.get("style") or "").lower()
         if ("display:none" in lower or "display: none" in lower
                 or "visibility:hidden" in lower or "visibility: hidden" in lower
                 or "opacity:0" in lower or "opacity: 0" in lower):
@@ -322,9 +432,7 @@ def _element_identifier(el: Element) -> str:
 
 def find_small_images(doc: Document) -> set:
     small = set()
-    for el in doc.html.descendants():
-        if el.tag not in ("img", "svg"):
-            continue
+    for el in _live(doc, _gathered(doc).images):
         width = _parse_int_attr(el, "width")
         height = _parse_int_attr(el, "height")
         if (0 < width < MIN_IMAGE_DIMENSION) or (0 < height < MIN_IMAGE_DIMENSION):
@@ -335,17 +443,15 @@ def find_small_images(doc: Document) -> set:
 
 
 def remove_small_images(doc: Document, small: set) -> None:
-    for el in list(doc.html.descendants()):
-        if el.tag in ("img", "svg"):
-            ident = _element_identifier(el)
-            if ident and ident in small:
-                el.remove()
+    for el in _live(doc, _gathered(doc).images):
+        ident = _element_identifier(el)
+        if ident and ident in small:
+            el.remove()
 
 
 def remove_all_images(doc: Document) -> None:
-    for el in list(doc.html.descendants()):
-        if el.tag in ("img", "svg", "picture", "video", "canvas"):
-            el.remove()
+    for el in _live(doc, _gathered(doc).media):
+        el.remove()
 
 
 # ---------------------------------------------------------------------------
@@ -363,10 +469,11 @@ def count_words(content_html: str) -> int:
 
 def _page_metadata(doc: Document, url: str) -> tuple:
     """(schema.org items, meta tags, metadata) of the unmutated page."""
-    schema_items = schema_org.extract_schema_org(doc.html)
+    g = _gathered(doc)
+    schema_items = schema_org.extract_schema_org(doc.html, g.jsonld)
     meta_tags = collect_meta_tags(doc)
     return (schema_items, meta_tags,
-            metadata.extract(doc.html, schema_items, meta_tags, url))
+            metadata.extract(doc.html, schema_items, meta_tags, url, g.probes))
 
 
 def _result(pre: tuple, content: str, text: str, **overrides) -> Result:

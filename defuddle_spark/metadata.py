@@ -29,12 +29,18 @@ class DomProbes:
     class matching is whitespace-token exact, attribute ops are
     case-sensitive, ``[attr]`` means present (empty string counts),
     and ``.authors a`` walks the real parent chain like Chain.match.
+
+    ``DomProbes(root)`` walks ``root``'s descendants; ``DomProbes()``
+    starts empty and takes the elements one ``add`` at a time, in
+    document order, from a walk that gathers more than metadata (the
+    kernel's).
     """
 
     __slots__ = ("title_el", "icon_el", "time_el", "canonical_el", "base_el",
-                 "author_itemprop", "author_class", "author_href", "authors_a")
+                 "author_itemprop", "author_class", "author_href", "authors_a",
+                 "_saw_authors_class")
 
-    def __init__(self, doc_root: Element) -> None:
+    def __init__(self, doc_root: Optional[Element] = None) -> None:
         self.title_el = None
         self.icon_el = None
         self.time_el = None
@@ -44,65 +50,70 @@ class DomProbes:
         self.author_class: List[Element] = []
         self.author_href: List[Element] = []
         self.authors_a: List[Element] = []
-        saw_authors_class = False
-        for el in doc_root.descendants():
-            tag = el.tag
-            # One scan over the (usually tiny) attrs list instead of one
-            # get() call per probed attribute.
-            cls = href = rel = itemprop = datetime_v = None
-            for k, v in el.attrs:
-                if k == "class":
-                    if cls is None:
-                        cls = v
-                elif k == "href":
-                    if href is None:
-                        href = v
-                elif k == "rel":
-                    if rel is None:
-                        rel = v
-                elif k == "itemprop":
-                    if itemprop is None:
-                        itemprop = v
-                elif k == "datetime":
-                    if datetime_v is None:
-                        datetime_v = v
-            if tag == "title":
-                if self.title_el is None:
-                    self.title_el = el
-            elif tag == "link":
-                if rel is not None:
-                    if self.icon_el is None and "icon" in rel:
-                        self.icon_el = el
-                    if self.canonical_el is None and rel == "canonical":
-                        self.canonical_el = el
-            elif tag == "time":
-                if self.time_el is None and datetime_v is not None:
-                    self.time_el = el
-            elif tag == "base":
-                if self.base_el is None and href is not None:
-                    self.base_el = el
-            elif tag == "a" and saw_authors_class:
-                # Ancestors precede descendants in the pre-order walk, so
-                # the guard is exact: an <a> can only match ".authors a"
-                # after some authors-class element has been seen.
-                node = el.parent
-                while (node is not None and node.type == ELEMENT
-                       and not node.tag.startswith("#")):
-                    c = node.get("class")
-                    if c is not None and "authors" in c.split():
-                        self.authors_a.append(el)
-                        break
-                    node = node.parent
-            if itemprop == "author":
-                self.author_itemprop.append(el)
-            if cls is not None and "author" in cls:
-                tokens = cls.split()
-                if "author" in tokens:
-                    self.author_class.append(el)
-                if "authors" in tokens:
-                    saw_authors_class = True
-            if href is not None and "author" in href:
-                self.author_href.append(el)
+        self._saw_authors_class = False
+        if doc_root is not None:
+            for el in doc_root.descendants():
+                self.add(el)
+
+    def add(self, el: Element) -> None:
+        """Probe ``el``, the next element in document order."""
+        tag = el.tag
+        # One scan over the (usually tiny) attrs list instead of one
+        # get() call per probed attribute.
+        cls = href = rel = itemprop = datetime_v = None
+        for k, v in el.attrs:
+            if k == "class":
+                if cls is None:
+                    cls = v
+            elif k == "href":
+                if href is None:
+                    href = v
+            elif k == "rel":
+                if rel is None:
+                    rel = v
+            elif k == "itemprop":
+                if itemprop is None:
+                    itemprop = v
+            elif k == "datetime":
+                if datetime_v is None:
+                    datetime_v = v
+        if tag == "title":
+            if self.title_el is None:
+                self.title_el = el
+        elif tag == "link":
+            if rel is not None:
+                if self.icon_el is None and "icon" in rel:
+                    self.icon_el = el
+                if self.canonical_el is None and rel == "canonical":
+                    self.canonical_el = el
+        elif tag == "time":
+            if self.time_el is None and datetime_v is not None:
+                self.time_el = el
+        elif tag == "base":
+            if self.base_el is None and href is not None:
+                self.base_el = el
+        elif tag == "a" and self._saw_authors_class:
+            # Ancestors precede descendants in the pre-order walk, so
+            # the guard is exact: an <a> can only match ".authors a"
+            # after some authors-class element has been seen.
+            node = el.parent
+            while (node is not None and node.type == ELEMENT
+                   and not node.tag.startswith("#")):
+                c = node.get("class")
+                if c is not None and "authors" in c.split():
+                    self.authors_a.append(el)
+                    break
+                node = node.parent
+        if itemprop == "author":
+            self.author_itemprop.append(el)
+        if cls is not None and "author" in cls:
+            tokens = cls.split()
+            if "author" in tokens:
+                self.author_class.append(el)
+            if "authors" in tokens:
+                self._saw_authors_class = True
+        if href is not None and "author" in href:
+            self.author_href.append(el)
 
 
 def _first(*vals: str) -> str:
@@ -131,8 +142,8 @@ def get_meta_content(meta_tags: List[dict], attr: str, value: str) -> str:
 
 def get_schema_property(schema_data: Any, prop: str) -> str:
     """metadata.go:674-769 — dotted-path search with exact-then-fuzzy descent."""
-    if schema_data is None:
-        return ""
+    if not schema_data:
+        return ""  # None, or a page without schema.org items: nothing found
 
     def search(data: Any, props: List[str], exact: bool) -> List[str]:
         if isinstance(data, str):
@@ -382,9 +393,13 @@ def _domain_from_url(raw_url: str) -> str:
 
 
 def extract(doc_root: Element, schema_data: Any, meta_tags: List[dict],
-            base_url: str) -> dict:
-    """metadata.go:117-166 — the full metadata struct for one document."""
-    probes = DomProbes(doc_root)
+            base_url: str, probes: Optional[DomProbes] = None) -> dict:
+    """metadata.go:117-166 — the full metadata struct for one document.
+
+    ``probes`` are ``doc_root``'s DomProbes when the caller already
+    gathered them; without them this walks ``doc_root`` once."""
+    if probes is None:
+        probes = DomProbes(doc_root)
     document_url = base_url
     if not document_url:
         document_url = _first(

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import json
 import re
-from typing import Any, List
+from typing import Any, List, Optional
 
 from .dom import Element
 from .selectors import find_all
@@ -92,10 +92,17 @@ def _preserve_jsonld_type(item: dict) -> None:
         item["@type"] = item["type"]
 
 
-def extract_schema_org(doc_root: Element) -> List[Any]:
-    """defuddle.go:920-982 — all valid JSON-LD items across scripts."""
+def extract_schema_org(doc_root: Element,
+                       scripts: Optional[List[Element]] = None) -> List[Any]:
+    """defuddle.go:920-982 — all valid JSON-LD items across scripts.
+
+    ``scripts`` are ``doc_root``'s ``script[type="application/ld+json"]``
+    descendants in document order when the caller already gathered them;
+    without them this walks ``doc_root`` once."""
+    if scripts is None:
+        scripts = find_all(doc_root, 'script[type="application/ld+json"]')
     all_items: List[Any] = []
-    for script in find_all(doc_root, 'script[type="application/ld+json"]'):
+    for script in scripts:
         content = script.text().strip()
         if not content:
             continue

@@ -51,7 +51,7 @@ NON_CONTENT_PATTERNS = (
 
 # match-any groups: "does any descendant match one of these" is
 # order-independent, so one indexed walk replaces 15/21 find_first sweeps
-_FOOTNOTE_INLINE_GROUP = SelectorGroup(constants.FOOTNOTE_INLINE_REFERENCES)
+FOOTNOTE_INLINE_GROUP = SelectorGroup(constants.FOOTNOTE_INLINE_REFERENCES)
 _FOOTNOTE_LISTS_GROUP = SelectorGroup(constants.FOOTNOTE_LIST_SELECTORS)
 
 
@@ -99,7 +99,7 @@ def _walk(top: Element, top_is_target: bool, tags: frozenset = frozenset(),
     each counted at the later text — except a join of the target's first
     text with one before the target."""
     list_match = _FOOTNOTE_LISTS_GROUP.matches
-    inline_match = _FOOTNOTE_INLINE_GROUP.matches
+    inline_match = FOOTNOTE_INLINE_GROUP.matches
     texts: list = []
     joined: set = set()
     out: List[_Stats] = []

@@ -13,10 +13,13 @@ driver builds no routing expression.
 
 Skew handling (SURVEY.md §4.2): HTML sizes are heavy-tailed; salting by
 url-hash spreads giant docs across partitions instead of letting a
-lexicographic url range concentrate them. Kernel cost is linear in page
-bytes, so one kernel wave over byte-balanced partitions needs no giant
-tier. At cluster scale set ``salt_partitions`` ≈ 2-3x total cores; AQE
-re-coalesces afterwards.
+lexicographic url range concentrate them. One kernel wave runs over those
+partitions; there is no giant tier. Kernel cost grows with page bytes but
+is not linear in them: on a parent with many children each removal or
+unwrap scans the parent's child list, so a long, wide page costs more per
+byte than a short one (a 1 MiB page of sibling blocks ~4.5 s). At cluster
+scale set ``salt_partitions`` ≈ 2-3x total cores; AQE re-coalesces
+afterwards.
 """
 
 from __future__ import annotations
@@ -131,8 +134,9 @@ def extract_pages(pages: DataFrame,
     if giant_threshold_bytes is not None:
         warnings.warn(
             "giant_threshold_bytes is ignored: the two-tier giant split was "
-            "removed because kernel cost is linear in page bytes, so one "
-            "salted kernel wave balances giant pages at lower cost",
+            "removed, and every page goes through one salted kernel wave "
+            "(a page's kernel cost is not linear in its bytes on parents "
+            "with many children, so a giant page can still be a slow task)",
             DeprecationWarning, stacklevel=2)
     df = pages.select("url", "html").filter(
         F.col("html").isNotNull() & (F.length(F.col("html")) > 0))

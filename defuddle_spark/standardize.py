@@ -22,7 +22,8 @@ from typing import List, Optional
 
 from . import constants
 from .dom import COMMENT, ELEMENT, TEXT, Document, Element, Text
-from .selectors import compile_selector, find_all, find_first
+from .scoring import FOOTNOTE_INLINE_GROUP
+from .selectors import SelectorGroup, find_all, find_first
 
 # content.go:21-43
 _NBSP_RE = re.compile("\xa0+")
@@ -50,13 +51,20 @@ ADDITIONAL_BLOCK_ELEMENTS = ("p", "h1", "h2", "h3", "h4", "h5", "h6", "ul",
                              "ol", "pre", "blockquote", "figure")
 _ADDITIONAL_BLOCK_SET = frozenset(ADDITIONAL_BLOCK_ELEMENTS)
 
-_FOOTNOTE_INLINE = [compile_selector(s) for s in constants.FOOTNOTE_INLINE_REFERENCES]
-_BACKREF_SELECTORS = [
-    compile_selector('a[href^="#"][class*="anchor"]'),
-    compile_selector('a[href^="#"][class*="ref"]'),
-    compile_selector('a[class*="footnote-backref"]'),
-    compile_selector(".footnote-backref"),
-]
+_BACKREFS = SelectorGroup([
+    'a[href^="#"][class*="anchor"]',
+    'a[href^="#"][class*="ref"]',
+    'a[class*="footnote-backref"]',
+    ".footnote-backref",
+])
+# standardize_elements' four rules (content.go:482-546); with no match
+# for any of them on entry, none can fire
+_PARAGRAPH_DIVS = 'div[data-testid^="paragraph"], div[role="paragraph"]'
+_LIST_DIVS = 'div[role="list"]'
+_LIST_ITEM_DIVS = 'div[role="listitem"]'
+_LITE_YOUTUBE = "lite-youtube"
+_ELEMENT_RULES = SelectorGroup(
+    [_PARAGRAPH_DIVS, _LIST_DIVS, _LIST_ITEM_DIVS, _LITE_YOUTUBE])
 
 
 def standardize_content(element: Element, title: str, doc: Document,
@@ -139,14 +147,39 @@ def standardize_headings(element: Element, title: str) -> None:
 # -- T3 ---------------------------------------------------------------------
 
 def standardize_footnotes(element: Element) -> None:
-    """content.go:426-450."""
-    for sel in _BACKREF_SELECTORS:
-        for el in sel.find_all(element):
-            el.remove()
-    for sel in _FOOTNOTE_INLINE:
-        for ref in sel.find_all(element):
-            if ref.tag != "sup":
-                ref.retag("sup")
+    """content.go:426-450: remove the backrefs, then make every inline
+    reference a <sup>.
+
+    One SelectorGroup sweep per selector list replaces the reference's
+    sweep per selector. Removal sweeps merge (see SelectorGroup). So do
+    the retag sweeps: a retag drops the element's attributes, and the
+    one selector with an ancestor step (``span.footnote-hovercard-target
+    a``) needs a span that only earlier selectors retag; in document
+    order that span is retagged before its descendants are tested, as it
+    is when the selectors run one after another."""
+    _sweep(element, _BACKREFS, lambda el: el.remove())
+    _sweep(element, FOOTNOTE_INLINE_GROUP,
+           lambda el: el if el.tag == "sup" else el.retag("sup"))
+
+
+def _sweep(element: Element, group: SelectorGroup, act) -> None:
+    """Visit ``element``'s descendants in document order and replace each
+    that ``group`` matches by ``act(el)``: the element that now stands in
+    its place, whose children are visited next, or None when it left the
+    tree (its subtree is skipped)."""
+    matches = group.matches
+    stack = element.children[::-1]
+    while stack:
+        node = stack.pop()
+        if node.type != ELEMENT:
+            continue
+        if matches(node):
+            node = act(node)
+            if node is None:
+                continue
+        cs = node.children
+        if cs:
+            stack.extend(cs[::-1])
 
 
 # -- T4 ---------------------------------------------------------------------
@@ -214,8 +247,10 @@ def _transform_list_item_element(el: Element) -> Optional[Element]:
 
 def standardize_elements(element: Element, doc: Document) -> None:
     """content.go:482-546."""
+    if not any(map(_ELEMENT_RULES.matches, element.descendants())):
+        return
     # Rule 1: div[data-testid^="paragraph"], div[role="paragraph"] → p
-    for el in find_all(element, 'div[data-testid^="paragraph"], div[role="paragraph"]'):
+    for el in find_all(element, _PARAGRAPH_DIVS):
         parts = ["<p"]
         for k, v in el.attrs:
             if k in constants.ALLOWED_ATTRIBUTES and k != "role":
@@ -224,19 +259,19 @@ def standardize_elements(element: Element, doc: Document) -> None:
         el.replace_with_html("".join(parts))
 
     # Rule 2: div[role="list"] → ul/ol
-    for el in find_all(element, 'div[role="list"]'):
+    for el in find_all(element, _LIST_DIVS):
         new_el = _transform_list_element(el, doc)
         if new_el is not None:
             el.replace_with_html(new_el.outer_html())
 
     # Rule 3: div[role="listitem"] → its .content
-    for el in find_all(element, 'div[role="listitem"]'):
+    for el in find_all(element, _LIST_ITEM_DIVS):
         new_el = _transform_list_item_element(el)
         if new_el is not None:
             el.replace_with_html(new_el.outer_html())
 
     # lite-youtube embeds (content.go:523-543)
-    for el in find_all(element, "lite-youtube"):
+    for el in find_all(element, _LITE_YOUTUBE):
         video_id = el.get("videoid") or ""
         if not video_id:
             continue

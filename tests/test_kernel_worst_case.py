@@ -75,7 +75,7 @@ def _oracle_stats(el):
         tag = "lists" if node.tag in ("ul", "ol") else node.tag
         if tag in counts:
             counts[tag] += 1
-        inline = inline or scoring._FOOTNOTE_INLINE_GROUP.matches(node)
+        inline = inline or scoring.FOOTNOTE_INLINE_GROUP.matches(node)
         lists = lists or scoring._FOOTNOTE_LISTS_GROUP.matches(node)
         stack.extend(node.children[::-1])
     text = "".join(parts)
@@ -311,3 +311,32 @@ def test_layout_table_cells_are_listed_once_per_table():
                                      find_main_content, doc) / cells
     assert per_cell[4000] < 400
     assert per_cell[4000] < 1.2 * per_cell[500]
+
+
+def test_probe_pages_are_walked_once_before_content_selection(monkeypatch):
+    """Parse once, walk once: on probe pages the kernel walks the whole
+    document once (the gathering walk) and makes at most 16 descendants
+    walks in all, where it made 8 and ~47."""
+    from pathlib import Path
+
+    from defuddle_spark import dom
+    from defuddle_spark.kernel import extract_document_bytes
+
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+    from tools.kernel_probe import build_pages
+
+    walks = whole = 0
+    descendants = dom.Element.descendants
+
+    def counted(self):
+        nonlocal walks, whole
+        walks += 1
+        whole += self.tag == "html"
+        return descendants(self)
+
+    pages = build_pages("/root/testdata/sf0.01", 300)
+    monkeypatch.setattr(dom.Element, "descendants", counted)
+    for url, html in pages:
+        assert extract_document_bytes(html, url=url).error is None
+    assert whole <= len(pages)
+    assert walks <= 16 * len(pages)

@@ -216,6 +216,81 @@ def test_resume_after_crash_after_record(spark, tmp_path, monkeypatch):
     pages.unpersist()
 
 
+def _archetype0_pages(spark, n):
+    """``n`` synthesized pages of archetype 0 (article with a 640x480 and
+    a 10x10 image), url-ordered."""
+    from defuddle_spark.spark.pages import synthesize_pages
+
+    pages = synthesize_pages(spark, SF).select("url", "html")
+    return (pages.filter(F.col("html").cast("string").contains("/media/"))
+            .orderBy("url").limit(n).cache())
+
+
+def test_job_kernel_options_reach_the_kernel_and_the_records(spark,
+                                                             tmp_path):
+    """``run_extraction_job(kernel_options=...)`` extracts under those
+    options and records them, next to the kernel version, in every
+    commit record."""
+    from defuddle_spark.spark.manifest import run_extraction_job
+
+    pages = _archetype0_pages(spark, 3)
+    content = {}
+    for name, options in (("plain", None), ("no_images",
+                                            {"remove_images": True})):
+        out_dir = str(tmp_path / name / "out")
+        man_dir = str(tmp_path / name / "manifest")
+        run_extraction_job(spark, pages, out_dir, man_dir, num_buckets=2,
+                           group_size=2, kernel_options=options)
+        content[name] = {r["url"]: r["content"] for r in
+                         spark.read.parquet(out_dir).collect()}
+        records = spark.read.json(man_dir).collect()
+        assert {r["kernel_options"] for r in records} == {
+            "{}" if options is None else '{"remove_images": true}'}
+        assert {r["kernel_version"] for r in records} == {"0.1.0"}
+    assert content["plain"].keys() == content["no_images"].keys()
+    assert len(content["plain"]) == 3
+    for url, html in content["plain"].items():
+        assert "<img" in html
+        assert "<img" not in content["no_images"][url]
+        assert content["no_images"][url] != html
+    pages.unpersist()
+
+
+def test_resume_under_other_kernel_options_is_refused(spark, tmp_path):
+    """A resume whose kernel options differ from the committed records'
+    raises before it runs a group, naming both option sets; under the
+    committed options it resumes."""
+    from defuddle_spark.spark.manifest import (committed_buckets,
+                                               run_extraction_job)
+
+    pages = _archetype0_pages(spark, 6)
+    out_dir, man_dir = str(tmp_path / "out"), str(tmp_path / "manifest")
+    job = dict(num_buckets=4, group_size=2)
+    m = run_extraction_job(spark, pages, out_dir, man_dir,
+                           fail_after_groups=1,
+                           kernel_options={"remove_images": True}, **job)
+    assert m["groups_run"] == 1
+    with pytest.raises(ValueError) as err:
+        run_extraction_job(spark, pages, out_dir, man_dir, **job)
+    assert '{"remove_images": true}' in str(err.value)
+    assert "this run has kernel_options {}" in str(err.value)
+    assert committed_buckets(spark, man_dir) == {0, 1}
+    m = run_extraction_job(spark, pages, out_dir, man_dir,
+                           kernel_options={"remove_images": True}, **job)
+    assert m["buckets_done_before"] == 2 and m["groups_run"] == 1
+    assert spark.read.parquet(out_dir).count() == 6
+    pages.unpersist()
+
+
+def test_run_job_remove_images_flag_sets_the_kernel_option():
+    from tools.run_job import kernel_options, parser
+
+    base = ["--input", "in", "--output", "out", "--manifest", "m"]
+    assert kernel_options(parser().parse_args(base)) == {}
+    assert kernel_options(parser().parse_args(base + ["--remove-images"])) \
+        == {"remove_images": True}
+
+
 def test_routing_column_is_the_kernel_dispatch(spark):
     """``extractor_route`` is the registry name of the extractor
     ``find_extractor`` picks for the url: case-insensitive, with the

@@ -217,3 +217,53 @@ def test_nested_paragraph_divs_stage_semantics():
     S.flatten_wrapper_elements(art)
     S.remove_empty_elements(art)
     assert art.inner_html() == "<p>a</p><p>b</p>"
+
+
+def _footnotes_one_sweep_per_selector(element):
+    """content.go:426-450 as the reference runs it: one sweep per
+    selector, backrefs first."""
+    from defuddle_spark import constants
+    from defuddle_spark.selectors import compile_selector
+
+    for s in ('a[href^="#"][class*="anchor"]', 'a[href^="#"][class*="ref"]',
+              'a[class*="footnote-backref"]', ".footnote-backref"):
+        for el in compile_selector(s).find_all(element):
+            el.remove()
+    for s in constants.FOOTNOTE_INLINE_REFERENCES:
+        for ref in compile_selector(s).find_all(element):
+            if ref.tag != "sup":
+                ref.retag("sup")
+
+
+def test_footnote_sweeps_equal_one_sweep_per_selector():
+    """standardize_footnotes' two SelectorGroup sweeps leave the tree the
+    reference's 25 per-selector sweeps leave, on nested references, a
+    retagged hovercard span, and backrefs inside references."""
+    import random
+
+    from defuddle_spark.standardize import standardize_footnotes
+
+    pieces = (
+        '<span class="footnote_ref">{}</span>', '<a href="#fn1">{}</a>',
+        '<span class="footnote-hovercard-target">{}</span>',
+        '<span class="footnote-hovercard-target footnote_ref">{}</span>',
+        '<sup class="reference">{}</sup>', '<cite class="ltx_cite">{}</cite>',
+        '<a class="footnote-backref" href="#r">{}</a>',
+        '<a href="#x" class="anchor">{}</a>', '<span id="fnr2">{}</span>',
+        '<a role="doc-biblioref" href="/b">{}</a>', "<b>{}</b>", "<p>{}</p>",
+    )
+    rng = random.Random(20261021)
+
+    def nest(depth):
+        if depth == 0 or rng.random() < 0.25:
+            return "t"
+        return "".join(rng.choice(pieces).format(nest(depth - 1))
+                       for _ in range(rng.randint(1, 3)))
+
+    for _ in range(400):
+        src = "<html><body><article>" + nest(4) + "</article></body></html>"
+        want, _ = _article(src)
+        _footnotes_one_sweep_per_selector(want)
+        got, _ = _article(src)
+        standardize_footnotes(got)
+        assert got.outer_html() == want.outer_html(), src

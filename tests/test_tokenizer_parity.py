@@ -101,6 +101,47 @@ def test_hand_cases_event_identical():
         assert fast_events(case) == stdlib_events(case), repr(case)
 
 
+# Start tags the one-match well-formed path (dom._STARTTAG_WELLFORMED)
+# takes, and ones it leaves to the tolerant path. Either way the events
+# must be html.parser's.
+WELLFORMED_TAKES = [
+    # uppercase names, and whitespace before the ">"
+    "<DIV>", "<P CLASS=X>x", "<Br>", "<p >", "<p\t\n>", "<lite-YouTube>",
+    # a name runs to ASCII whitespace, "/" or ">", as html.parser's does
+    "<a\xa0b=1>", "<a\x0b>",
+    # self-closing forms
+    "<br/>", "<br />", "<img src=a/>", "<img src='a'/>", '<a b="c" />',
+    # valueless and duplicate attributes
+    "<input disabled>", "<a x x=1 X=2>", "<a b c d>", "<a hidden/>",
+    '<a b="" c=\'\'>',
+    # unquoted values with character references
+    "<a href=?a=1&amp;b=2>", "<a href=x&copy=1>", "<a title=&lt;b&gt;>",
+    "<a href=/p?x=1&not=2>", "<a v=&#65;&#x42;>", "<a b=c\"d>", "<a b=`c`>",
+    "<a b=c=d>", "<a b=<c>",
+    # newlines and tabs between attributes
+    '<div\nid=a\n\tclass="b c"\r\n>', "<a\fb=1\rc=2>",
+    # a "<" or ">" inside a quoted value
+    "<a title='1 > 0'>x", '<a title="<b>">x', "<a title='a<b' x=1>",
+    '<a title="x\ny">',
+]
+WELLFORMED_DECLINES = [
+    "<a/b>", "<a b/c>", "<b / >", "<b //>", "<a b='c'd>", "<a b = c>",
+    "<a b==c>", "<a b=>", "<a =b>", "<a b=\"c>", "<a\x00>", "<a b\xa0>",
+    "<a \x0bb>", "<a b='c", "<a b=c\xa0>",
+    "<a b", "<a 'b'>",
+]
+
+
+def test_wellformed_start_tag_path_matches_stdlib():
+    from defuddle_spark.dom import _STARTTAG_WELLFORMED
+    for case in WELLFORMED_TAKES + WELLFORMED_DECLINES:
+        assert fast_events(case) == stdlib_events(case), repr(case)
+    for case in WELLFORMED_TAKES:
+        assert _STARTTAG_WELLFORMED.match(case), repr(case)
+    for case in WELLFORMED_DECLINES:
+        assert not _STARTTAG_WELLFORMED.match(case), repr(case)
+
+
 _ATOMS = [
     "<b>", "</b>", "<div class='x y'>", "</div>", "<img src=a>", "x", "&",
     ";", "&amp;", "&amp", "&#65;", "&#x41;", "&fake;", "<", ">", "'", '"',
@@ -111,6 +152,24 @@ _ATOMS = [
     "<![weird[", "<b / >", "<noscript>", "</noscript>", "<xmp>", "</xmp>",
     "<plaintext>", "<iframe>", "</iframe>",
 ]
+
+
+_TAG_ATOMS = [
+    "<", "a", "B", "div", " ", "\n", "\t", "\x0b", "\xa0", "\f", "\r", "=",
+    '"', "'", "/", ">", "x", "&amp;", "&", "&#65;", "class", "href", "=x",
+    '="v"', "='v'", "`", "\x00", "-", "/>", " />", "&not", "?a=b&c=d",
+]
+
+
+def test_fuzz_start_tags_event_identical():
+    """Start tags with attribute-like noise, well-formed or not."""
+    rng = random.Random(20261021)
+    for _ in range(5000):
+        s = "<" + rng.choice(["a", "div", "P", "br", "x-y"]) + "".join(
+            rng.choice(_TAG_ATOMS) for _ in range(rng.randint(1, 12)))
+        if rng.random() < 0.5:
+            s += ">"
+        assert fast_events(s) == stdlib_events(s), repr(s)
 
 
 def test_fuzz_event_identical():

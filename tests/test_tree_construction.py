@@ -1127,3 +1127,70 @@ def test_rcdata_charref_edges():
     d2 = parse("<!DOCTYPE html><title>&lt;/title&gt;</title><body>t</body>")
     t2 = next(e for e in d2.head.element_children() if e.tag == "title")
     assert t2.text() == "</title>"
+
+
+# --- the fast paths build the rule chain's tree ---------------------------
+class _EveryTag:
+    """A tag set holding every tag: no tag takes a fast path."""
+
+    def __contains__(self, tag):
+        return True
+
+
+_SOUP_TAGS = (
+    "div", "p", "span", "a", "b", "i", "em", "font", "table", "tr", "td",
+    "th", "tbody", "caption", "col", "li", "ul", "ol", "dd", "dt", "select",
+    "option", "optgroup", "template", "svg", "math", "foreignObject", "mi",
+    "desc", "h1", "h2", "form", "button", "input", "img", "br", "hr", "nobr",
+    "ruby", "rt", "head", "body", "html", "title", "script", "style",
+    "textarea", "pre", "frameset", "frame", "noscript", "plaintext",
+    "section", "article", "code", "image", "applet", "object", "meta",
+    "link", "main", "DIV", "Span",
+)
+_SOUP_ATTRS = ("", "", " class=x", ' id="a"', " type=hidden", " color=red",
+               ' encoding="text/html"', " a b", " x=1 X=2")
+
+
+def _soup(rng):
+    parts = []
+    for _ in range(rng.randint(1, 30)):
+        r = rng.random()
+        tag = rng.choice(_SOUP_TAGS)
+        if r < 0.45:
+            parts.append("<" + tag + rng.choice(_SOUP_ATTRS)
+                         + rng.choice((">", ">", "/>")))
+        elif r < 0.75:
+            parts.append("</" + tag + ">")
+        elif r < 0.9:
+            parts.append(rng.choice(("x", " ", "\n", "t&amp;", "\xa0")))
+        else:
+            parts.append(rng.choice(("<!doctype html>", "<!-- c -->", "<p >",
+                                     "<br />", "<a/b>")))
+    return "".join(parts)
+
+
+def test_tag_fast_paths_build_the_rule_chain_tree(monkeypatch):
+    """_TreeBuilder.handle_starttag's and handle_endtag's fast paths are
+    shortcuts through the in-body rules, not rules of their own: with
+    them switched off, documents and fragments of seeded tag soup parse
+    to the same trees."""
+    import random
+
+    from defuddle_spark import dom
+
+    rng = random.Random(20261021)
+    cases = [_soup(rng) for _ in range(3000)]
+
+    def trees():
+        out = []
+        for src in cases:
+            out.append(dom.parse(src).root.outer_html())
+            out.append("".join(n.outer_html() if n.type == dom.ELEMENT
+                               else getattr(n, "data", "")
+                               for n in dom.parse_fragment(src)))
+        return out
+
+    fast = trees()
+    monkeypatch.setattr(dom, "_START_RULES", _EveryTag())
+    monkeypatch.setattr(dom, "_END_RULES", _EveryTag())
+    assert trees() == fast

@@ -1,28 +1,38 @@
-"""Automated previous-round kernel A/B (verdict r6 #7): the definitive
-code-vs-platform discriminator the probe ratio only approximates.
+"""Kernel A/B against an earlier commit: the code-vs-platform
+discriminator the probe ratio only approximates.
 
-The driver ends each round with a ``round N: …`` commit, so the
-previous round's kernel is always addressable. This tool checks that
-tree out into a scratch worktree and runs the SAME single-core probe on
-both kernels, interleaved rep-by-rep (prev, cur, prev, cur, …) so
-platform drift inside the measurement window cancels instead of
-landing on one side. ``kernel_ab_ratio`` = current best / previous
-best: ~1.0 means any bench delta this round is platform/load, not
-kernel code.
+By default the base is the previous round's kernel: the driver ends each
+round with a ``round N: …`` commit, so it is always addressable
+(``run_kernel_ab``, which bench.py embeds). ``--base REV`` compares
+against any commit instead, for example a change's parent. The tool
+exports the base tree into a scratch directory (``git archive``) and runs
+the SAME single-core probe on both kernels, interleaved rep-by-rep
+(base, cur, base, cur, …) so platform drift inside the measurement
+window cancels instead of landing on one side. ``kernel_ab_ratio`` =
+current best / base best: ~1.0 means any bench delta is platform/load,
+not kernel code.
 
-Each rep is its own pinned subprocess (two package versions cannot be
-imported into one interpreter); the probe's in-process warmup keeps
-import/JIT cost out of the timed loop.
+Each rep is its own subprocess pinned to one core (two package versions
+cannot be imported into one interpreter); the probe's in-process warmup
+keeps import/JIT cost out of the timed loop.
 
-Usage: python tools/kernel_ab.py [sf_dir]  (importable: run_kernel_ab)
+Usage: python tools/kernel_ab.py [sf_dir] [--base REV] [--reps N]
+       [--docs N]
+Prints one JSON line: the best and median ms/doc of each side and the
+number of reps in which the current kernel was faster.
 """
 
 from __future__ import annotations
 
+import argparse
+import io
 import json
 import os
+import shutil
+import statistics
 import subprocess
 import sys
+import tarfile
 import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -75,39 +85,75 @@ def _prev_round_sha() -> str:
     return ""
 
 
+def _interleaved(sha: str, sf_dir: str, n_docs: int, reps: int) -> tuple:
+    """(base ms/doc per rep, current ms/doc per rep), the base being the
+    committed tree ``sha``, exported to a scratch directory."""
+    tree = tempfile.mkdtemp(prefix="defuddle_kernel_ab_")
+    try:
+        archive = subprocess.run(["git", "archive", sha], cwd=REPO,
+                                 check=True, capture_output=True).stdout
+        with tarfile.open(fileobj=io.BytesIO(archive)) as tar:
+            tar.extractall(tree)
+        base, cur = [], []
+        for _ in range(reps):
+            base.append(_probe_once(tree, sf_dir, n_docs))
+            cur.append(_probe_once(REPO, sf_dir, n_docs))
+        return base, cur
+    finally:
+        shutil.rmtree(tree, ignore_errors=True)
+
+
 def run_kernel_ab(sf_dir: str = "/root/testdata/sf0.01",
                   n_docs: int = 500, reps: int = 3) -> dict:
-    """Returns the kernel_ab_* fields, or {} when there is no previous
-    round commit / no usable git state (round 1, detached sandboxes)."""
+    """Returns the kernel_ab_* fields against the previous round, or {}
+    when there is no previous round commit / no usable git state (round
+    1, detached sandboxes)."""
     try:
         sha = _prev_round_sha()
-    except (subprocess.CalledProcessError, OSError):
-        return {}
-    if not sha:
-        return {}
-    wt = tempfile.mkdtemp(prefix="defuddle_kernel_ab_")
-    try:
-        # mkdtemp creates the dir; worktree add wants to create it itself
-        os.rmdir(wt)
-        _git("worktree", "add", "--detach", wt, sha)
-        prev_best = cur_best = float("inf")
-        for _ in range(reps):
-            prev_best = min(prev_best, _probe_once(wt, sf_dir, n_docs))
-            cur_best = min(cur_best, _probe_once(REPO, sf_dir, n_docs))
-        return {
-            "kernel_ab_prev_sha": sha[:12],
-            "kernel_ab_prev_ms_per_doc": round(prev_best, 4),
-            "kernel_ab_cur_ms_per_doc": round(cur_best, 4),
-            "kernel_ab_ratio": round(cur_best / prev_best, 4),
-        }
+        if not sha:
+            return {}
+        base, cur = _interleaved(sha, sf_dir, n_docs, reps)
     except (subprocess.CalledProcessError, OSError, ValueError,
-            KeyError, json.JSONDecodeError):
+            KeyError, json.JSONDecodeError, tarfile.TarError):
         return {}
-    finally:
-        subprocess.run(["git", "worktree", "remove", "--force", wt],
-                       cwd=REPO, capture_output=True)
+    return _best(sha, base, cur)
+
+
+def _best(sha: str, base: list, cur: list) -> dict:
+    return {
+        "kernel_ab_prev_sha": sha[:12],
+        "kernel_ab_prev_ms_per_doc": round(min(base), 4),
+        "kernel_ab_cur_ms_per_doc": round(min(cur), 4),
+        "kernel_ab_ratio": round(min(cur) / min(base), 4),
+    }
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
+    ap.add_argument("--base", default=None,
+                    help="commit to compare against (default: the "
+                         "previous round's commit)")
+    ap.add_argument("--reps", type=int, default=3,
+                    help="alternating reps per side (default 3)")
+    ap.add_argument("--docs", type=int, default=500,
+                    help="probe pages per rep (default 500)")
+    args = ap.parse_args()
+    sha = _git("rev-parse", args.base) if args.base else _prev_round_sha()
+    if not sha:
+        print(json.dumps({}))
+        return
+    base, cur = _interleaved(sha, args.sf_dir, args.docs, args.reps)
+    print(json.dumps({
+        **_best(sha, base, cur),
+        "kernel_ab_prev_median_ms": round(statistics.median(base), 4),
+        "kernel_ab_cur_median_ms": round(statistics.median(cur), 4),
+        "kernel_ab_median_ratio": round(
+            statistics.median(cur) / statistics.median(base), 4),
+        "kernel_ab_cur_faster_reps": sum(c < b for b, c in zip(base, cur)),
+        "kernel_ab_reps": args.reps,
+    }))
 
 
 if __name__ == "__main__":
-    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    print(json.dumps(run_kernel_ab(sf)))
+    main()

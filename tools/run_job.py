@@ -23,7 +23,8 @@ that derives pages from the documents table. Re-running with the same
 --output/--manifest resumes: buckets with a manifest record are skipped,
 and the rest are redone, each group overwriting its own bucket
 directories (so rows a crashed attempt left behind are replaced, not
-duplicated).
+duplicated). A resume must pass the same option flags (--remove-images)
+as the run it resumes; the job refuses one that does not.
 
 Mirrors the reference CLI surface (cmd/defuddle/main.go:38-120) at job
 granularity: input selection, output destination, option flags.
@@ -37,7 +38,7 @@ import sys
 import time
 
 
-def main() -> None:
+def parser() -> argparse.ArgumentParser:
     ap = argparse.ArgumentParser(description="defuddle-spark extraction job")
     ap.add_argument("--input", required=True,
                     help="pages table path (parquet dir), or sf dir with --synthesize")
@@ -49,8 +50,18 @@ def main() -> None:
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--group-size", type=int, default=16)
     ap.add_argument("--salt-partitions", type=int, default=None)
-    ap.add_argument("--remove-images", action="store_true")
-    args = ap.parse_args()
+    ap.add_argument("--remove-images", action="store_true",
+                    help="drop img/svg/picture/video/canvas from the content")
+    return ap
+
+
+def kernel_options(args: argparse.Namespace) -> dict:
+    """The ``kernel.Options`` fields the command line sets."""
+    return {"remove_images": True} if args.remove_images else {}
+
+
+def main() -> None:
+    args = parser().parse_args()
 
     from pyspark.sql import SparkSession
 
@@ -70,7 +81,8 @@ def main() -> None:
     metrics = run_extraction_job(
         spark, pages, args.output, args.manifest,
         num_buckets=args.buckets, group_size=args.group_size,
-        salt_partitions=args.salt_partitions)
+        salt_partitions=args.salt_partitions,
+        kernel_options=kernel_options(args))
     metrics["wall_s"] = round(time.monotonic() - t0, 2)
     print(json.dumps(metrics))
     spark.stop()
