@@ -23,7 +23,8 @@ walk over the unmutated tree (``_gather``, kept on the Document) collects
 everything the phases before content selection read from the whole
 document: meta tags, JSON-LD scripts and metadata's probes, img/svg and
 media elements, entry-point matches, the scoring fallbacks' candidates,
-inline-styled elements and the selector-removal candidates. Those phases
+inline-styled elements and the element list the selector removal sweeps
+(matched only there, so routed pages never pay for it). Those phases
 only prune the tree, so each reads its gathered list and skips what an
 earlier phase detached; none walks the document again.
 """
@@ -169,31 +170,28 @@ class _Gathered:
     DomProbes, img/svg (``images``) and every removable medium
     (``media``), the entry-point matches as (element, priority index),
     the scoring fallbacks' ``td`` cells and candidate blocks, elements
-    with an inline style, and the selector-removal candidates as
-    (element, matches a partial pattern), kept when that or an exact
-    selector matches.
+    with an inline style, and every element (``elements``), which the
+    selector removal sweeps.
 
     Until content selection the kernel only prunes the tree, so an
     element still attached keeps the attributes and ancestors it was
-    gathered with; consumers skip the ones detached since (``_live``).
-    Pruning only ever turns a selector match false, so the candidates
-    hold every element that can match later."""
+    gathered with; consumers skip the ones detached since (``_live``)."""
 
-    __slots__ = ("metas", "jsonld", "probes", "images", "media", "entries",
-                 "cells", "candidates", "styled", "clutter")
+    __slots__ = ("elements", "metas", "jsonld", "probes", "images", "media",
+                 "entries", "cells", "candidates", "styled")
 
 
 def _gather(root: Element) -> _Gathered:
     g = _Gathered()
+    elements = list(root.descendants())
     metas, jsonld, images, media, entries = [], [], [], [], []
-    cells, candidates, styled, clutter = [], [], [], []
+    cells, candidates, styled = [], [], []
     probes = metadata.DomProbes()
     probe = probes.add
-    exact_match = _EXACT_GROUP.matches
-    partial_search = _PARTIAL_RE.search
+    is_jsonld = schema_org.is_jsonld_script
     tag_tbl, id_tbl = _ENTRY_TAGS, _ENTRY_IDS
     cls_tbl, role_tbl = _ENTRY_CLASSES, _ENTRY_ROLES
-    for el in root.descendants():
+    for el in elements:
         tag = el.tag
         if tag == "meta":
             metas.append(el)
@@ -208,9 +206,10 @@ def _gather(root: Element) -> _Gathered:
             i = tag_tbl.get(tag)
             if i is not None:
                 entries.append((el, i))
+        elif is_jsonld(el):
+            jsonld.append(el)
         # attribute names are unique per element (the tree builder keeps
         # the first of duplicates), so one scan answers every el.get
-        partial = False
         for k, v in el.attrs:
             if k == "id":
                 i = id_tbl.get(v)
@@ -228,19 +227,10 @@ def _gather(root: Element) -> _Gathered:
             elif k == "style":
                 if v:
                     styled.append(el)
-            elif k == "type":
-                if tag == "script" and v == "application/ld+json":
-                    jsonld.append(el)
-            if (not partial and v and k in _TEST_ATTRIBUTES
-                    and partial_search(v.lower())):
-                partial = True
         probe(el)
-        if partial or exact_match(el):
-            clutter.append((el, partial))
-    g.metas, g.jsonld, g.probes = metas, jsonld, probes
+    g.elements, g.metas, g.jsonld, g.probes = elements, metas, jsonld, probes
     g.images, g.media, g.entries = images, media, entries
-    g.cells, g.candidates = cells, candidates
-    g.styled, g.clutter = styled, clutter
+    g.cells, g.candidates, g.styled = cells, candidates, styled
     return g
 
 
@@ -370,23 +360,25 @@ def _find_content_by_scoring(doc: Document) -> Optional[Element]:
 # ---------------------------------------------------------------------------
 
 def remove_by_selector(doc: Document, remove_exact: bool, remove_partial: bool) -> int:
-    """Single-sweep match-any removal; output-equivalent to the reference's
-    ordered per-selector passes (see SelectorGroup docstring for why).
-    It sweeps the gathered candidates still attached and re-tests the
-    exact selectors: one with an ancestor step may stop matching once an
-    earlier removal in this sweep cut the element off that ancestor.
+    """Single-sweep match-any removal over the gathered elements still
+    attached; output-equivalent to the reference's ordered per-selector
+    passes (see SelectorGroup docstring for why).
 
     Returns the number of elements removed by the *partial* branch — the
     retry loop uses it to skip the second pass when it provably cannot
     change the output (see extract_document)."""
     live = _attached(doc)
+    partial_search = _PARTIAL_RE.search
     partial_removed = 0
-    for el, partial in [c for c in _gathered(doc).clutter if live(c[0])]:
+    for el in [e for e in _gathered(doc).elements if live(e)]:
         if remove_exact and _EXACT_GROUP.matches(el):
             el.remove()
-        elif remove_partial and partial:
-            el.remove()
-            partial_removed += 1
+        elif remove_partial:
+            for k, v in el.attrs:
+                if v and k in _TEST_ATTRIBUTES and partial_search(v.lower()):
+                    el.remove()
+                    partial_removed += 1
+                    break
     return partial_removed
 
 

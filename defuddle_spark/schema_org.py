@@ -22,7 +22,6 @@ import re
 from typing import Any, List, Optional
 
 from .dom import Element
-from .selectors import find_all
 
 # defuddle.go:33-40 (Go regexes are not multiline: ^/$ anchor the whole text)
 _HTML_COMMENT_RE = re.compile(r"<!--[\s\S]*?-->")
@@ -92,15 +91,22 @@ def _preserve_jsonld_type(item: dict) -> None:
         item["@type"] = item["type"]
 
 
+def is_jsonld_script(el: Element) -> bool:
+    """The reference's JSON-LD script selector,
+    ``script[type="application/ld+json"]``."""
+    return el.tag == "script" and el.get("type") == "application/ld+json"
+
+
 def extract_schema_org(doc_root: Element,
                        scripts: Optional[List[Element]] = None) -> List[Any]:
     """defuddle.go:920-982 — all valid JSON-LD items across scripts.
 
-    ``scripts`` are ``doc_root``'s ``script[type="application/ld+json"]``
-    descendants in document order when the caller already gathered them;
-    without them this walks ``doc_root`` once."""
+    ``scripts`` are ``doc_root``'s JSON-LD scripts (``is_jsonld_script``)
+    in document order when the caller already gathered them; without
+    them this walks ``doc_root`` once."""
     if scripts is None:
-        scripts = find_all(doc_root, 'script[type="application/ld+json"]')
+        scripts = [el for el in doc_root.descendants()
+                   if is_jsonld_script(el)]
     all_items: List[Any] = []
     for script in scripts:
         content = script.text().strip()

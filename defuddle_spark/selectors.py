@@ -264,18 +264,9 @@ class SelectorGroup:
     (head tag, #id value, first class token, or one required attribute
     name); ``Chain.match`` re-verifies the full compound, so the index is
     only a gate — weaker keys cost wasted match calls, never wrong answers.
-
-    A one-step chain with attribute tests and no id or class is keyed by
-    its first attribute test, as a regex over that attribute's value
-    (``by_value``), and only an element that passes it is matched in
-    full. Chains that are that one test and at most a tag
-    (``[href*="x"]``, ``a[role="y" i]``) need no full match, so the
-    tests on one attribute name with the same tag and case flag merge
-    into one regex.
     """
 
-    __slots__ = ("by_tag", "by_id", "by_class", "by_attr", "by_value",
-                 "universal_always")
+    __slots__ = ("by_tag", "by_id", "by_class", "by_attr", "universal_always")
 
     def __init__(self, selectors: Iterable[str]) -> None:
         self.by_tag: dict = {}
@@ -283,25 +274,10 @@ class SelectorGroup:
         self.by_class: dict = {}
         self.by_attr: dict = {}
         self.universal_always: List[Chain] = []
-        self.by_value: dict = {}
-        merged: dict = {}
         for s in selectors:
             for chain in compile_selector(s).chains:
                 head = chain.steps[0][0]
-                if (len(chain.steps) == 1 and head.sid is None
-                        and not head.classes and head.attrs):
-                    name, op, val, ci = head.attrs[0]
-                    if op and op != "=" and not val:
-                        continue  # ^= $= *= with an empty value never match
-                    tag = None if head.tag == "*" else head.tag
-                    pattern = _VALUE_PATTERNS[op].format(
-                        re.escape(val.lower() if ci else val))
-                    if len(head.attrs) == 1 and not head.nots:
-                        merged.setdefault((name, tag, ci), []).append(pattern)
-                    else:
-                        self.by_value.setdefault(name, []).append(
-                            (tag, ci, re.compile(pattern), chain))
-                elif head.tag is not None and head.tag != "*":
+                if head.tag is not None and head.tag != "*":
                     self.by_tag.setdefault(head.tag, []).append(chain)
                 elif head.sid is not None:
                     self.by_id.setdefault(head.sid, []).append(chain)
@@ -311,16 +287,12 @@ class SelectorGroup:
                     self.by_attr.setdefault(head.attrs[0][0], []).append(chain)
                 else:
                     self.universal_always.append(chain)
-        for (name, tag, ci), patterns in merged.items():
-            self.by_value.setdefault(name, []).append(
-                (tag, ci, re.compile("|".join(patterns)), None))
 
     def matches(self, el: Element) -> bool:
         for chain in self.by_tag.get(el.tag, ()):
             if chain.match(el):
                 return True
         by_id, by_class, by_attr = self.by_id, self.by_class, self.by_attr
-        by_value = self.by_value
         for k, v in el.attrs:
             if by_id and k == "id":
                 for chain in by_id.get(v, ()):
@@ -335,22 +307,10 @@ class SelectorGroup:
                 for chain in by_attr.get(k, ()):
                     if chain.match(el):
                         return True
-            tests = by_value.get(k)
-            if tests:
-                for tag, ci, rx, chain in tests:
-                    if ((tag is None or tag == el.tag)
-                            and rx.search(v.lower() if ci else v)
-                            and (chain is None or chain.match(el))):
-                        return True
         for chain in self.universal_always:
             if chain.match(el):
                 return True
         return False
-
-
-# Compound.match's attribute operators as regexes over the value.
-_VALUE_PATTERNS = {"": "", "=": r"\A{}\Z", "^=": r"\A{}", "$=": r"{}\Z",
-                   "*=": "{}"}
 
 
 def find_all(root: Element, sel: str) -> List[Element]:

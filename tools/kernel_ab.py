@@ -17,7 +17,6 @@ cannot be imported into one interpreter); the probe's in-process warmup
 keeps import/JIT cost out of the timed loop.
 
 Usage: python tools/kernel_ab.py [sf_dir] [--base REV] [--reps N]
-       [--docs N]
 Prints one JSON line: the best and median ms/doc of each side and the
 number of reps in which the current kernel was faster.
 """
@@ -36,6 +35,7 @@ import tarfile
 import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+N_DOCS = 500  # probe pages per rep
 
 _PROBE_SNIPPET = """\
 import json, sys
@@ -104,7 +104,7 @@ def _interleaved(sha: str, sf_dir: str, n_docs: int, reps: int) -> tuple:
 
 
 def run_kernel_ab(sf_dir: str = "/root/testdata/sf0.01",
-                  n_docs: int = 500, reps: int = 3) -> dict:
+                  n_docs: int = N_DOCS, reps: int = 3) -> dict:
     """Returns the kernel_ab_* fields against the previous round, or {}
     when there is no previous round commit / no usable git state (round
     1, detached sandboxes)."""
@@ -136,14 +136,12 @@ def main() -> None:
                          "previous round's commit)")
     ap.add_argument("--reps", type=int, default=3,
                     help="alternating reps per side (default 3)")
-    ap.add_argument("--docs", type=int, default=500,
-                    help="probe pages per rep (default 500)")
     args = ap.parse_args()
     sha = _git("rev-parse", args.base) if args.base else _prev_round_sha()
     if not sha:
         print(json.dumps({}))
         return
-    base, cur = _interleaved(sha, args.sf_dir, args.docs, args.reps)
+    base, cur = _interleaved(sha, args.sf_dir, N_DOCS, args.reps)
     print(json.dumps({
         **_best(sha, base, cur),
         "kernel_ab_prev_median_ms": round(statistics.median(base), 4),
